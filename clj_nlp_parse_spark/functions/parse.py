@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from clj_nlp_parse_spark import dialect, schema
+from clj_nlp_parse_spark.functions.text import spread_small_input
 from clj_nlp_parse_spark.operators.dictionary import (
     CompiledItem, DictItem, compile_items, match_token_py)
 from clj_nlp_parse_spark.operators.features import NEGATIVE_WORDS, POSITIVE_WORDS
@@ -201,7 +202,8 @@ def parse_captions(df: DataFrame, items: list[DictItem] | None = None,
                     for i, t in zip(pdf[id_col], pdf[text_col])],
             })
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    return spread_small_input(df.select(id_col, text_col)).mapInPandas(
+        run, schema=out_schema)
 
 
 # ---------------------------------------------- panon query operators (O1-O11)

@@ -46,18 +46,21 @@ def register(name: str, oracle: str | None = None):
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return (spark.read.schema(schema.DOCUMENTS_SCHEMA)
+            .parquet(f"{sf_dir}/documents.parquet"))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet timestamps arrive as TIMESTAMP_NTZ in Spark 4; cast to instant
     # (session tz pinned to UTC) so unix_millis == DuckDB epoch_ms.
-    return (spark.read.parquet(f"{sf_dir}/events.parquet")
+    return (spark.read.schema(schema.EVENTS_SCHEMA)
+            .parquet(f"{sf_dir}/events.parquet")
             .withColumn("ts", F.col("ts").cast("timestamp")))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return (spark.read.schema(schema.EMBEDDINGS_SCHEMA)
+            .parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 # --------------------------------------------------------------------- F1/F14

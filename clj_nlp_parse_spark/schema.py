@@ -116,18 +116,47 @@ STOPWORDS = (
 )
 
 # --------------------------------------------------------------- input schema
+# The engine's input tables, declared so a read needs no schema-inference
+# job (one footer-reading job per spark.read.parquet call otherwise). Every
+# field is nullable, as Spark reads parquet. Spark's rule for a given
+# schema: a file missing a declared column reads it as nulls; a column of
+# another type fails the read.
+DOCUMENTS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("source", T.StringType()),
+    T.StructField("n_chars", T.LongType()),
+])
+
+# ts is TIMESTAMP_NTZ: what Spark 4 infers for the parquet files
+EVENTS_SCHEMA = T.StructType([
+    T.StructField("event_id", T.LongType()),
+    T.StructField("ts", T.TimestampNTZType()),
+    T.StructField("user_id", T.LongType()),
+    T.StructField("event_type", T.StringType()),
+    T.StructField("value", T.DoubleType()),
+    T.StructField("props", T.StringType()),
+])
+
+EMBEDDINGS_SCHEMA = T.StructType([
+    T.StructField("vec_id", T.LongType()),
+    T.StructField("embedding", T.ArrayType(T.FloatType())),
+    T.StructField("label", T.IntegerType()),
+])
+
 # BASELINE.json input_hint: Iceberg table of image + caption pairs.
 IMAGES_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType(), False),
-    T.StructField("bytes", T.BinaryType(), True),
-    T.StructField("w", T.IntegerType(), True),
-    T.StructField("h", T.IntegerType(), True),
-    T.StructField("fmt", T.StringType(), True),
-    T.StructField("caption", T.StringType(), True),
-    T.StructField("phash", T.LongType(), True),
+    T.StructField("image_id", T.StringType()),
+    T.StructField("bytes", T.BinaryType()),
+    T.StructField("w", T.IntegerType()),
+    T.StructField("h", T.IntegerType()),
+    T.StructField("fmt", T.StringType()),
+    T.StructField("caption", T.StringType()),
+    T.StructField("phash", T.LongType()),
     # graft columns for as-of/window semantics (FIXTURES.md §1)
-    T.StructField("entity_id", T.StringType(), True),
-    T.StructField("event_ts", T.TimestampType(), True),
+    T.StructField("entity_id", T.StringType()),
+    T.StructField("event_ts", T.TimestampType()),
 ])
 
 # Token struct — Spark mapping of the reference's annotation-keys

@@ -24,6 +24,11 @@ def get_spark(
     parallelism: local core count; default $SPARK_GRAFT_CPUS or 32.
     On a real cluster pass master via spark-submit and these local[]
     settings are ignored.
+
+    Python workers fork from the engine's daemon (`pyworker`): each task
+    otherwise re-reads the directory of every zip archive on the worker's
+    path (pyspark.zip, py4j, the spark-core jar), over 100 ms a task. The
+    daemon needs the package importable by the workers, as the kernels do.
     """
     cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuf = shuffle_partitions or max(cpus, 8)
@@ -37,6 +42,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuf))
         # Arrow for every pandas UDF / applyInPandas crossing.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "clj_nlp_parse_spark.pyworker")
         # Arrow batch size bounds JVM-side bytes in flight per task. Image
         # rows are ~27 KB (bytes column): 10k-row batches × 32 tasks would
         # hold >8 GB in flight and turn the job into a GC benchmark; 2048

@@ -24,6 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from clj_nlp_parse_spark.operators.dictionary import DictItem, compile_items
+from clj_nlp_parse_spark.schema import IMAGES_SCHEMA
 
 RULE_TEMPLATE = """# Token-regex rules generated by clj_nlp_parse_spark
 # (engine-native analog of the reference's CoreNLP TokensRegex file,
@@ -143,8 +144,10 @@ def read_images_table(spark: SparkSession, location: str,
     Iceberg (the north_rule target) when the runtime has the Iceberg
     catalog configured — with optional snapshot pinning so checkpoint
     manifests can record exactly which snapshot a run consumed
-    (`VERSION AS OF`, checkpoint.py). Plain parquet fallback in this
-    sandbox (no Iceberg jars present).
+    (`VERSION AS OF`, checkpoint.py). Plain parquet where no Iceberg
+    jars are present, read with the declared `schema.IMAGES_SCHEMA`: no
+    footer-reading inference job per read. Iceberg takes its schema from
+    the table metadata.
     """
     if fmt == "auto":
         fmt = "iceberg" if ("/" not in location
@@ -161,7 +164,7 @@ def read_images_table(spark: SparkSession, location: str,
                 "pass a parquet path instead") from e
     if snapshot_id is not None:
         raise ValueError("snapshot pinning requires the iceberg format")
-    return spark.read.parquet(location)
+    return spark.read.schema(IMAGES_SCHEMA).parquet(location)
 
 
 def current_snapshot_id(spark: SparkSession, table: str) -> str:
@@ -194,7 +197,11 @@ def write_feature_table(df: "DataFrame", path: str,
     of a full shuffle+sort.
 
     One shuffle (repartition on the partition keys) + in-task sort; no
-    driver-side work.
+    driver-side work. The repartition names its partition count
+    (spark.sql.shuffle.partitions): AQE coalesces a small keyed shuffle
+    without one into a single task, which then writes every file alone.
+    Each (day, bucket) still lands in exactly one task, so the files and
+    their row order do not depend on the count.
     """
     from pyspark.sql import functions as F
 
@@ -202,9 +209,10 @@ def write_feature_table(df: "DataFrame", path: str,
            .withColumn("p_bucket",
                        F.pmod(F.xxhash64(F.col(entity_col)),
                               F.lit(buckets)).cast("int")))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # the sort leads with the partition columns: the dynamic-partition
     # writer re-sorts on them otherwise, destroying the (entity, ts) order
-    (out.repartition("p_day", "p_bucket")
+    (out.repartition(n, "p_day", "p_bucket")
         .sortWithinPartitions("p_day", "p_bucket", entity_col, ts_col)
         .write.mode("overwrite")
         .partitionBy("p_day", "p_bucket")

@@ -143,20 +143,23 @@ def test_choose_ivf_cells_rule():
     assert vals == sorted(vals)
 
 
-def test_dist_zip_matches_source():
-    """The committed spark-submit zip must match the working tree byte for
-    byte (review r04: a stale zip shipped superseded scale semantics).
-    Regenerate with `python tools/make_pyfiles.py` whenever the package
-    changes."""
+def test_dist_zip_matches_source(tmp_path):
+    """The spark-submit zip that tools/make_pyfiles.py builds carries every
+    package .py byte for byte, and nothing else (review r04: a stale zip
+    shipped superseded scale semantics)."""
+    import importlib.util
     import os
     import zipfile
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(root, "dist", "clj_nlp_parse_spark.zip")
-    assert os.path.exists(zpath), "dist zip missing — run make_pyfiles.py"
-    z = zipfile.ZipFile(zpath)
+    spec = importlib.util.spec_from_file_location(
+        "make_pyfiles", os.path.join(root, "tools", "make_pyfiles.py"))
+    mk = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mk)
+    z = zipfile.ZipFile(mk.build(str(tmp_path / "clj_nlp_parse_spark.zip")))
     names = set(z.namelist())
     pkg = os.path.join(root, "clj_nlp_parse_spark")
+    n = 0
     for dirpath, _dirs, files in os.walk(pkg):
         if "__pycache__" in dirpath:
             continue
@@ -165,9 +168,11 @@ def test_dist_zip_matches_source():
                 continue
             full = os.path.join(dirpath, f)
             arc = os.path.relpath(full, root)
-            assert arc in names, f"{arc} missing from dist zip — regenerate"
+            assert arc in names, f"{arc} missing from the built zip"
             assert z.read(arc) == open(full, "rb").read(), \
-                f"{arc} differs from dist zip — regenerate with make_pyfiles"
+                f"{arc} differs in the built zip"
+            n += 1
+    assert n == len(names)
 
 
 def test_purge_stale_scratch_age_gate(tmp_path, monkeypatch):

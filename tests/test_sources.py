@@ -3,6 +3,8 @@ mirrors ner_test.clj:51-86 (rule-file round-trip)."""
 
 from __future__ import annotations
 
+import pytest
+
 from clj_nlp_parse_spark import sources
 from clj_nlp_parse_spark.operators.dictionary import DictItem
 
@@ -93,6 +95,62 @@ def test_write_feature_table_layout(spark, tmp_path):
         sorted(pdf[["entity_id", "event_ts"]].itertuples(index=False))
     # round trip preserves all rows
     assert spark.read.parquet(p).count() == len(rows)
+
+
+def test_write_feature_table_parallel_write(spark, tmp_path):
+    """The write stage runs in more than one task: a small keyed shuffle
+    without a partition count would be coalesced by AQE into one."""
+    import datetime as dt
+    rows = [(f"e{e}", dt.datetime(2025, 1, 1 + i % 3, i % 24), float(i))
+            for e in range(20) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "entity_id string, event_ts timestamp, fval double")
+    sc = spark.sparkContext
+    group = f"write-feature-table-{tmp_path.name}"
+    sc.setJobGroup(group, "parallel write")
+    try:
+        sources.write_feature_table(df, str(tmp_path / "feat"), buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    write_stage = max(st.getJobInfo(max(jobs)).stageIds)
+    assert st.getStageInfo(write_stage).numTasks > 1
+
+
+_SCHEMA_TABLES = [("documents", "DOCUMENTS_SCHEMA"),
+                  ("events", "EVENTS_SCHEMA"),
+                  ("embeddings", "EMBEDDINGS_SCHEMA")]
+
+
+@pytest.mark.parametrize("sf,table,name", [
+    (sf, t, n) for sf in ("sf0.001", "sf0.01") for t, n in _SCHEMA_TABLES
+] + [("synth", "images", "IMAGES_SCHEMA")])
+def test_declared_schema_equals_inferred(spark, sf_dir, tmp_path, sf, table,
+                                         name):
+    """Reads with a declared schema skip the inference job; the declared
+    schema must be what Spark would infer."""
+    import os
+    from clj_nlp_parse_spark import schema, synth
+    if sf == "synth":
+        path = str(tmp_path / "images.parquet")
+        synth.synth_images(spark, 8, partitions=1).write.parquet(path)
+    else:
+        path = os.path.join(os.path.dirname(sf_dir), sf, f"{table}.parquet")
+    assert getattr(schema, name) == spark.read.parquet(path).schema
+
+
+def test_declared_schema_type_mismatch_fails_loudly(spark, tmp_path):
+    """A documents file whose doc_id is a string fails the read instead of
+    reading as nulls."""
+    from clj_nlp_parse_spark import queries
+    d = tmp_path / "sf"
+    spark.createDataFrame(
+        [("d1", "some text", "en", "web", 9)],
+        "doc_id string, text string, lang string, source string, "
+        "n_chars bigint").write.parquet(str(d / "documents.parquet"))
+    with pytest.raises(Exception, match="(?i)doc_id"):
+        queries._docs(spark, str(d)).collect()
 
 
 def test_feature_string_roundtrip():

@@ -1,9 +1,10 @@
 """spark-submit entry point (north_rule submission path).
 
 Runs the flagship image+caption as-of feature materialization with
-checkpointed, resumable output. The engine code arrives via --py-files:
+checkpointed, resumable output. The engine code arrives via --py-files,
+so build the zip first (dist/ is not committed):
 
-  python tools/make_pyfiles.py
+  python tools/make_pyfiles.py        # writes dist/clj_nlp_parse_spark.zip
   spark-submit --master local[8] \
       --py-files dist/clj_nlp_parse_spark.zip \
       tools/submit_job.py --n-images 500 --out /tmp/feat_out
