@@ -277,3 +277,19 @@ def pos_py(t: str) -> str:
 
 
 TOKEN_RE_PY = _re.compile(TOKEN_RE)
+_SENT_SPLIT_PY = _re.compile("[.!?]+")
+
+
+def sentence_words_py(text: str | None) -> list[list[str]]:
+    """Python twin of features.sentence_words_sql: the word lists of the
+    [.!?]+-delimited segments that hold at least one token."""
+    sents = (TOKEN_RE_PY.findall(seg.lower())
+             for seg in _SENT_SPLIT_PY.split(text or ""))
+    return [ws for ws in sents if ws]
+
+
+def tagged_words_py(text: str | None) -> tuple[list[str], list[str]]:
+    """The words of a text (TOKEN_RE over lower(text)) and their POS tags
+    (pos_py)."""
+    ws = TOKEN_RE_PY.findall((text or "").lower())
+    return ws, [pos_py(w) for w in ws]

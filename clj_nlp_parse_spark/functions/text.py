@@ -7,6 +7,9 @@ engine's re-expression of the reference's per-record annotation operators
 A1/A3/A4/A5 (reference config.clj:64-106, stanford.clj:185-208,193-195);
 the composition P1/P2 (reference parse.clj:125-130, stanford.clj:494-516)
 becomes chained `withColumn` stages fused by Catalyst into one projection.
+
+The per-doc Python rule kernels (natlog, coref, srl, trees, chunking) share
+one Arrow harness here: `map_text_rows` behind `spread_small_input`.
 """
 
 from __future__ import annotations
@@ -98,11 +101,52 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     a small parquet scan arrives as ONE input split, which would
     serialize the kernel. Repartition ONLY when the scan has fewer
     partitions than the default parallelism — at corpus scale input
-    splits abound and no shuffle is added."""
+    splits abound and no shuffle is added. A streaming frame is returned
+    unchanged: a micro-batch has no scan split count to read."""
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def map_text_rows(df: DataFrame, rows, fields, id_col: str = "doc_id",
+                  text_col: str = "text") -> DataFrame:
+    """Run a per-doc Python rule kernel as one declared Arrow batch stage
+    (mapInArrow behind spread_small_input).
+
+    `rows(text)` returns the output tuples of one doc (text may be None);
+    `fields` lists their columns as (name, pyarrow type) and is the one
+    place the output schema is written — the Spark types are derived from
+    it. Each output row is prefixed with its doc's id, gathered from the
+    input batch by `pyarrow.compute.take`, so the id keeps its input type
+    and nullability."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    names = [id_col] + [n for n, _ in fields]
+    row_type = pa.struct([pa.field(n, t) for n, t in fields])
+
+    def kern(batches):
+        import pyarrow.compute as pc
+        for batch in batches:
+            src, out = [], []
+            for k, text in enumerate(batch.column(text_col).to_pylist()):
+                n = len(out)
+                out.extend(rows(text))
+                src.extend([k] * (len(out) - n))
+            # one C-level tuple->struct conversion; split into columns
+            yield pa.record_batch(
+                [pc.take(batch.column(id_col), pa.array(src, pa.int32()))]
+                + pa.array(out, row_type).flatten(),
+                names=names)
+
+    inp = spread_small_input(df.select(id_col, text_col))
+    out_schema = T.StructType(
+        [inp.schema[id_col]] + from_arrow_type(row_type).fields)
+    return inp.mapInArrow(kern, out_schema)
 
 
 def go_word_forms_col(toks: str = "toks", form: str = "word") -> Column:

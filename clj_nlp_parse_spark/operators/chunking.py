@@ -23,10 +23,12 @@ scan, identical formulation in both dialects.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.functions.text import map_text_rows
 
 # PRP is an NP constituent and head (a pronoun IS a noun phrase — the
 # reference golden sr_parse_test.clj:26-31 has NP(PRP I))
@@ -133,6 +135,34 @@ def chunks_sql(tags: tuple[str, ...], head_tags: tuple[str, ...],
     FROM agg"""
 
 
+_CHUNK_SPECS = (("NP", frozenset(NP_TAGS), frozenset(NP_HEAD_TAGS)),
+                ("VP", frozenset(VP_TAGS), frozenset(VP_HEAD_TAGS)))
+
+
+def _chunk_rows(text: str | None) -> list[tuple]:
+    ws, tags = dialect.tagged_words_py(text)
+    n = len(ws)
+    out = []
+    for label, in_set, head_set in _CHUNK_SPECS:
+        ci = 0
+        i = 0
+        while i < n:
+            if tags[i] not in in_set:
+                i += 1
+                continue
+            j = i
+            head = None
+            while j < n and tags[j] in in_set:
+                if tags[j] in head_set:
+                    head = ws[j]
+                j += 1
+            if head is not None:
+                out.append((label, ci, i, j, head, " ".join(ws[i:j])))
+                ci += 1
+            i = j
+    return out
+
+
 def chunk_rows(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
     """NP and VP chunk rows (id_col, label, chunk_index, tok_beg,
@@ -141,68 +171,12 @@ def chunk_rows(df: DataFrame, id_col: str = "doc_id",
     form paid two explode→window→window→agg pipelines (one per label);
     the kernel applies the identical maximal-run + head-election contract
     per doc. All values are ints/strings, oracle-gated at both SFs."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    specs = (("NP", frozenset(NP_TAGS), frozenset(NP_HEAD_TAGS)),
-             ("VP", frozenset(VP_TAGS), frozenset(VP_HEAD_TAGS)))
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o = {k: [] for k in ("doc", "label", "ci", "beg", "end",
-                                 "head", "text")}
-            for did, text in zip(ids, texts):
-                ws = tok.findall((text or "").lower())
-                tags = [dialect.pos_py(w) for w in ws]
-                for label, in_set, head_set in specs:
-                    ci = 0
-                    i = 0
-                    n = len(ws)
-                    while i < n:
-                        if tags[i] not in in_set:
-                            i += 1
-                            continue
-                        j = i
-                        head = None
-                        while j < n and tags[j] in in_set:
-                            if tags[j] in head_set:
-                                head = ws[j]
-                            j += 1
-                        if head is not None:
-                            o["doc"].append(did)
-                            o["label"].append(label)
-                            o["ci"].append(ci)
-                            o["beg"].append(i)
-                            o["end"].append(j)
-                            o["head"].append(head)
-                            o["text"].append(" ".join(ws[i:j]))
-                            ci += 1
-                        i = j
-            yield pa.record_batch(
-                [pa.array(o["doc"], pa.int64()), pa.array(o["label"]),
-                 pa.array(o["ci"], pa.int64()),
-                 pa.array(o["beg"], pa.int64()),
-                 pa.array(o["end"], pa.int64()),
-                 pa.array(o["head"], pa.string()),
-                 pa.array(o["text"], pa.string())],
-                names=[id_col, "label", "chunk_index", "tok_beg",
-                       "tok_end", "head", "text"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("label", T.StringType()),
-         T.StructField("chunk_index", T.LongType()),
-         T.StructField("tok_beg", T.LongType()),
-         T.StructField("tok_end", T.LongType()),
-         T.StructField("head", T.StringType()),
-         T.StructField("text", T.StringType())])
-    return inp.mapInArrow(kern, out_schema)
+    return map_text_rows(
+        df, _chunk_rows,
+        [("label", pa.string()), ("chunk_index", pa.int64()),
+         ("tok_beg", pa.int64()), ("tok_end", pa.int64()),
+         ("head", pa.string()), ("text", pa.string())],
+        id_col, text_col)
 
 
 def np_chunks(df: DataFrame, id_col: str = "doc_id",

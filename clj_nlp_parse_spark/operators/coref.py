@@ -25,330 +25,119 @@ The graft contract (each rule hand-checkable against the reference shape):
   - head_index: the mention's LAST token, 1-based (rightmost-headed
     noun compounds — the deterministic stand-in for :head-index)
 
-Scale shape: clustering is PER-DOCUMENT by definition, so the whole
-operator compiles to ONE Catalyst projection over let-bound arrays —
-zero shuffle (array form; the exploded row form is one declared Arrow
-batch stage, r6). The key counting is bounded by
-mentions-per-doc, never by corpus size.
+Scale shape: clustering is PER-DOCUMENT by definition, so each surface
+(the chain-mention rows and the per-doc aggregates) is one declared Arrow
+batch stage over one shared mention function — zero shuffle. The key
+counting is bounded by mentions-per-doc, never by corpus size. The DuckDB
+CTE renders the same rule tables as the independent oracle.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.functions.text import map_text_rows
 from clj_nlp_parse_spark.operators import ner
 from clj_nlp_parse_spark.operators.features import sentence_words_sql
-from clj_nlp_parse_spark.operators.trees import _spark_let
 
 
-def mention_key_sql(ws: str, m: str, d: str = "spark") -> str:
-    """Chain clustering key: lemma-joined mention words. `ws` = bound
-    sentence word-array name, `m` = bound mention struct name (tok_beg
-    0-based, tok_end exclusive — the ner.py mention shape)."""
-    lem = dialect.lemma_case_expr("w", d)
-    if d == "spark":
-        return (f"array_join(transform(slice({ws}, {m}.tok_beg + 1, "
-                f"{m}.tok_end - {m}.tok_beg), w -> {lem}), ' ')")
+def mention_key_sql(ws: str, m: str) -> str:
+    """DuckDB chain clustering key: lemma-joined mention words. `ws` =
+    bound sentence word-array name, `m` = bound mention struct name
+    (tok_beg 0-based, tok_end exclusive — the ner.py mention shape)."""
+    lem = dialect.lemma_case_expr("w", "duck")
     return (f"array_to_string(list_transform({ws}[{m}.tok_beg + 1:"
             f"{m}.tok_end], w -> {lem}), ' ')")
-
-
-def _sentence_mentions_spark(si: str, ws: str) -> str:
-    """Mention structs (sent_index, label, tok_beg, tok_end, key) for one
-    sentence. `si` = 1-based sentence index expr, `ws` = word-array expr;
-    the type array is let-bound once (HOF free-var re-eval guard)."""
-    body = (f"transform({ner.ner_mentions_sql('m0.ty', 'spark')}, m -> "
-            f"named_struct("
-            f"'sent_index', {si} - 1, 'label', m.label, "
-            f"'tok_beg', m.tok_beg, 'tok_end', m.tok_end, "
-            f"'key', {mention_key_sql('m0.ws', 'm', 'spark')}))")
-    return _spark_let(
-        {"ws": ws, "ty": ner.token_types_sql(ws, "spark")}, body, "m0")
-
-
-def doc_mentions_spark(sents: str) -> str:
-    """All mentions of a doc in textual order, from a bound per-sentence
-    word-arrays name. sequence(1, 0) is DESCENDING in Spark — the empty
-    guard is load-bearing."""
-    seq = (f"CASE WHEN size({sents}) = 0 THEN array() "
-           f"ELSE sequence(1, size({sents})) END")
-    one = _sentence_mentions_spark("si", f"try_element_at({sents}, si)")
-    return f"flatten(transform({seq}, si -> {one}))"
-
-
-def coref_expr(text_col: str) -> str:
-    """Spark expression: text -> per-doc coref array (the reference's
-    coref annotation as a typed column):
-    array<struct<chain_id, mention_key, label, sent_index, token_beg,
-    token_end, head_index, chain_size>>, mentions in textual order.
-
-    SORT-BASED clustering, O(m log m + d) per doc (r5): the r4 form
-    computed per-key counts by filtering the mention array per distinct
-    key (O(d*m)) and looked up chain_id/chain_size per mention with
-    array_position over the key tables (O(m*d)) — quadratic on a
-    'directory page' doc where every mention is a distinct key, and on
-    a chain-dense doc. Now: sort (key, textual-index) pairs once; break
-    positions in the sorted key sequence give the distinct keys and
-    their counts (the ner.py break-array trick); a segment-repeat array
-    gives every sorted position its distinct-key RANK in O(m); a second
-    segment-repeat array gives each rank its cumulative count of
-    QUALIFYING (count >= 2) ranks — exactly the 1-based chain_id the
-    sorted qualifying-key table implies; qualifying mentions are then
-    re-sorted by textual index to restore the output order. Identical
-    output to the r4 form (tools/probe_coref.py: diff 0) and to the
-    unchanged DuckDB oracle."""
-    allm = doc_mentions_spark("c0.sents")
-    at = lambda a, i: f"try_element_at({a}, {i})"
-    # (key, textual idx), sorted by key (idx breaks ties — irrelevant,
-    # idx is unique); struct comparison is field-by-field
-    sk = (f"array_sort(transform(CASE WHEN size(a1.allm) = 0 THEN "
-          f"cast(array() as array<int>) ELSE "
-          f"sequence(1, size(a1.allm)) END, i -> named_struct("
-          f"'key', {at('a1.allm', 'i')}.key, 'idx', i)))")
-    # break positions: 1-based starts of each distinct-key run in sk
-    bs = (f"CASE WHEN size(a2.sk) = 0 THEN cast(array() as array<int>) "
-          f"ELSE filter(sequence(1, size(a2.sk)), i -> i = 1 OR "
-          f"{at('a2.sk', 'i - 1')}.key != {at('a2.sk', 'i')}.key) END")
-    nxt = (f"coalesce({at('a3.bs', 'bj + 1')}, size(a3.sk) + 1)")
-    # counts aligned with the sorted distinct keys (= the old dkeys
-    # order: sk is key-sorted, so run order == array_sort order)
-    cnts = (f"transform(CASE WHEN size(a3.bs) = 0 THEN "
-            f"cast(array() as array<int>) ELSE "
-            f"sequence(1, size(a3.bs)) END, bj -> "
-            f"({nxt}) - {at('a3.bs', 'bj')})")
-    # per-sorted-position distinct-key rank (1-based), by run segments
-    rk = (f"flatten(transform(CASE WHEN size(a3.bs) = 0 THEN "
-          f"cast(array() as array<int>) ELSE "
-          f"sequence(1, size(a3.bs)) END, bj -> "
-          f"array_repeat(bj, ({nxt}) - {at('a3.bs', 'bj')})))")
-    # ranks of qualifying keys (ascending)
-    qpos = (f"filter(CASE WHEN size(a4.cnts) = 0 THEN "
-            f"cast(array() as array<int>) ELSE "
-            f"sequence(1, size(a4.cnts)) END, bj -> "
-            f"{at('a4.cnts', 'bj')} >= 2)")
-    # cumq[r] = #{q in qpos : q <= r} for rank r in 1..#distinct —
-    # constant between qualifying ranks, so segment-repeat again:
-    # (qpos[t-1], qpos[t]) carries t-1, position qpos[t] carries t,
-    # tail after the last qualifying rank carries size(qpos)
-    qprev = (f"CASE WHEN qt = 1 THEN 0 ELSE "
-             f"{at('a5.qpos', 'qt - 1')} END")
-    cumq = (f"concat(flatten(transform(CASE WHEN size(a5.qpos) = 0 THEN "
-            f"cast(array() as array<int>) ELSE "
-            f"sequence(1, size(a5.qpos)) END, qt -> concat("
-            f"array_repeat(qt - 1, {at('a5.qpos', 'qt')} - ({qprev}) - 1),"
-            f" array(qt)))), "
-            f"array_repeat(size(a5.qpos), size(a5.cnts) - "
-            f"coalesce({at('a5.qpos', '-1')}, 0)))")
-    # qualifying sorted positions -> (textual idx, finished row), then
-    # re-sort by idx (unique, compared first) to restore textual order
-    m_at = f"{at('a6.allm', at('a6.sk', 'p') + '.idx')}"
-    row = (f"named_struct("
-           f"'chain_id', cast({at('a6.cumq', at('a6.rk', 'p'))} "
-           f"as bigint), "
-           f"'mention_key', {m_at}.key, 'label', {m_at}.label, "
-           f"'sent_index', cast({m_at}.sent_index as bigint), "
-           f"'token_beg', cast({m_at}.tok_beg + 1 as bigint), "
-           f"'token_end', cast({m_at}.tok_end + 1 as bigint), "
-           f"'head_index', cast({m_at}.tok_end as bigint), "
-           f"'chain_size', cast({at('a6.cnts', at('a6.rk', 'p'))} "
-           f"as bigint))")
-    body = (f"transform(array_sort(transform(filter("
-            f"CASE WHEN size(a6.sk) = 0 THEN cast(array() as array<int>) "
-            f"ELSE sequence(1, size(a6.sk)) END, p -> "
-            f"{at('a6.cnts', at('a6.rk', 'p'))} >= 2), p -> "
-            f"named_struct('oidx', {at('a6.sk', 'p')}.idx, "
-            f"'row', {row}))), e -> e.row)")
-    l_a6 = _spark_let(
-        {"allm": "a5.allm", "sk": "a5.sk", "rk": "a5.rk",
-         "cnts": "a5.cnts", "cumq": cumq}, body, "a6")
-    l_a5 = _spark_let(
-        {"allm": "a4.allm", "sk": "a4.sk", "rk": "a4.rk",
-         "cnts": "a4.cnts", "qpos": qpos}, l_a6, "a5")
-    l_a4 = _spark_let(
-        {"allm": "a3.allm", "sk": "a3.sk", "rk": rk, "cnts": cnts},
-        l_a5, "a4")
-    l_a3 = _spark_let(
-        {"allm": "a2.allm", "sk": "a2.sk", "bs": bs}, l_a4, "a3")
-    l_a2 = _spark_let({"allm": "a1.allm", "sk": sk}, l_a3, "a2")
-    l_a1 = _spark_let({"allm": allm}, l_a2, "a1")
-    return _spark_let({"sents": sentence_words_sql(text_col, "spark")},
-                      l_a1, "c0")
-
-
-def add_coref(df: DataFrame, text_col: str = "text",
-              out_col: str = "coref") -> DataFrame:
-    """Attach the coref chain-mention array to any frame with a text
-    column — one projection, composes with every other annotator."""
-    return df.withColumn(out_col, F.expr(coref_expr(text_col)))
 
 
 #: flat chain-mention output column order (after doc_id)
 COREF_COLS = ("chain_id", "mention_key", "label", "sent_index",
               "token_beg", "token_end", "head_index", "chain_size")
 
+_WORD_TYPE = {w: t for t, ws in ner.GAZETTEER.items() for w in ws}
+
+
+def _doc_mentions(text: str | None) -> list[tuple]:
+    """The mention rule over one doc: (sent_index, label, tok_beg,
+    tok_end, key) per maximal same-type run of gazetteer-typed tokens,
+    textual order; tok_beg 0-based, tok_end exclusive, key = the run's
+    lemma-joined words."""
+    mentions = []
+    for si, ws in enumerate(dialect.sentence_words_py(text)):
+        types = [_WORD_TYPE.get(w) for w in ws]
+        i = 0
+        while i < len(types):
+            if types[i] is None:
+                i += 1
+                continue
+            j = i
+            while j < len(types) and types[j] == types[i]:
+                j += 1
+            key = " ".join(dialect.lemma_py(w) for w in ws[i:j])
+            mentions.append((si, types[i], i, j, key))
+            i = j
+    return mentions
+
+
+def _chain_rows(text: str | None) -> list[tuple]:
+    mentions = _doc_mentions(text)
+    cnt = Counter(m[4] for m in mentions)
+    rank = {k: r for r, k in enumerate(
+        sorted(k for k, c in cnt.items() if c >= 2), start=1)}
+    return [(rank[key], key, lab, si, beg + 1, end + 1, end, cnt[key])
+            for (si, lab, beg, end, key) in mentions if key in rank]
+
 
 def coref_rows(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
-    """One row per chain mention in textual order (id_col + COREF_COLS) —
-    the exploded surface of coref_expr, as a DECLARED Arrow batch stage
-    (r6 optimization, guide §4: the fused-parser precedent). The SQL form
-    built the sort-based per-doc clustering in a six-level let-bound HOF
-    projection and exploded it through an interpreted Generate (~2.9 s at
-    sf0.1); the kernel applies the IDENTICAL rule table per doc (the
-    fuzz-pinned coref twin's algorithm): gazetteer token typing, maximal
-    same-type run merging, lemma-joined keys, chains = keys with >= 2
-    mentions, chain_id = 1-based rank in sorted qualifying-key order.
-    Values are ints/strings only — and ASCII/UTF-8 string sorting in
-    Python compares code points exactly like UTF8String's binary order,
-    so output is byte-identical (oracle-gated at both SFs)."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
+    """One row per chain mention in textual order (id_col + COREF_COLS)
+    as a declared Arrow batch stage: chains = keys with >= 2 mentions in
+    the doc, chain_id = 1-based rank in sorted qualifying-key order.
+    Values are ints/strings only — and Python string sorting compares
+    code points exactly like UTF8String's binary order, so output is
+    byte-identical (oracle-gated at both SFs)."""
+    fields = [(c, pa.string() if c in ("mention_key", "label")
+               else pa.int64()) for c in COREF_COLS]
+    return map_text_rows(df, _chain_rows, fields, id_col, text_col)
 
-    from clj_nlp_parse_spark.operators import ner as _ner
 
-    w2t = {w: t for t, ws in _ner.GAZETTEER.items() for w in ws}
-
-    def kern(batches):
-        import re
-        from collections import Counter
-        tok = re.compile("[a-z0-9']+")
-        splitter = re.compile("[.!?]+")
-        lemma = dialect.lemma_py
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            cols = {c: [] for c in (id_col,) + COREF_COLS}
-            for did, text in zip(ids, texts):
-                mentions = []
-                si = -1
-                for seg in splitter.split(text or ""):
-                    ws = tok.findall(seg.lower())
-                    if not ws:
-                        continue
-                    si += 1
-                    types = [w2t.get(w) for w in ws]
-                    i = 0
-                    while i < len(types):
-                        if types[i] is None:
-                            i += 1
-                            continue
-                        j = i
-                        while j < len(types) and types[j] == types[i]:
-                            j += 1
-                        key = " ".join(lemma(w) for w in ws[i:j])
-                        mentions.append((si, types[i], i, j, key))
-                        i = j
-                cnt = Counter(m[4] for m in mentions)
-                rank = {k: r + 1 for r, k in enumerate(
-                    sorted(k for k, c in cnt.items() if c >= 2))}
-                for (si, lab, beg, end, key) in mentions:
-                    if key not in rank:
-                        continue
-                    cols[id_col].append(did)
-                    cols["chain_id"].append(rank[key])
-                    cols["mention_key"].append(key)
-                    cols["label"].append(lab)
-                    cols["sent_index"].append(si)
-                    cols["token_beg"].append(beg + 1)
-                    cols["token_end"].append(end + 1)
-                    cols["head_index"].append(end)
-                    cols["chain_size"].append(cnt[key])
-            arrs = [pa.array(cols[id_col], pa.int64())]
-            for c in COREF_COLS:
-                typ = pa.string() if c in ("mention_key", "label") \
-                    else pa.int64()
-                arrs.append(pa.array(cols[c], typ))
-            yield pa.record_batch(arrs, names=[id_col, *COREF_COLS])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col]]
-        + [T.StructField(c, T.StringType()
-                         if c in ("mention_key", "label") else T.LongType())
-           for c in COREF_COLS])
-    return inp.mapInArrow(kern, out_schema)
+def _chain_features(text: str | None) -> list[tuple]:
+    q = [c for c in Counter(m[4] for m in _doc_mentions(text)).values()
+         if c >= 2]
+    nc, nm = len(q), sum(q)
+    return [(nc, nm, max(q, default=0),
+             0.0 if nc == 0 else float(nm) / float(nc))]
 
 
 def coref_doc_features(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """Per-doc chain aggregates (n_chains, n_chain_mentions,
-    max_chain_size, mean_chain_size) as a declared Arrow batch stage (r6)
-    — one output row per input doc (zero-defaults preserved); the mean is
-    one double division, bit-identical in IEEE."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from clj_nlp_parse_spark.operators import ner as _ner
-
-    w2t = {w: t for t, ws in _ner.GAZETTEER.items() for w in ws}
-
-    def kern(batches):
-        import re
-        from collections import Counter
-        tok = re.compile("[a-z0-9']+")
-        splitter = re.compile("[.!?]+")
-        lemma = dialect.lemma_py
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o_id, o_nc, o_nm, o_mx, o_mean = [], [], [], [], []
-            for did, text in zip(ids, texts):
-                keys = []
-                for seg in splitter.split(text or ""):
-                    ws = tok.findall(seg.lower())
-                    if not ws:
-                        continue
-                    types = [w2t.get(w) for w in ws]
-                    i = 0
-                    while i < len(types):
-                        if types[i] is None:
-                            i += 1
-                            continue
-                        j = i
-                        while j < len(types) and types[j] == types[i]:
-                            j += 1
-                        keys.append(" ".join(lemma(w) for w in ws[i:j]))
-                        i = j
-                cnt = Counter(keys)
-                q = [c for c in cnt.values() if c >= 2]
-                nc, nm = len(q), sum(q)
-                o_id.append(did)
-                o_nc.append(nc)
-                o_nm.append(nm)
-                o_mx.append(max(q) if q else 0)
-                o_mean.append(0.0 if nc == 0 else float(nm) / float(nc))
-            yield pa.record_batch(
-                [pa.array(o_id, pa.int64()), pa.array(o_nc, pa.int64()),
-                 pa.array(o_nm, pa.int64()), pa.array(o_mx, pa.int64()),
-                 pa.array(o_mean, pa.float64())],
-                names=[id_col, "n_chains", "n_chain_mentions",
-                       "max_chain_size", "mean_chain_size"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("n_chains", T.LongType()),
-         T.StructField("n_chain_mentions", T.LongType()),
-         T.StructField("max_chain_size", T.LongType()),
-         T.StructField("mean_chain_size", T.DoubleType())])
-    return inp.mapInArrow(kern, out_schema)
+    max_chain_size, mean_chain_size) over the coref_rows mention rule, as
+    a declared Arrow batch stage — one output row per input doc (zero
+    defaults for chainless docs); the mean is one double division,
+    bit-identical in IEEE."""
+    return map_text_rows(
+        df, _chain_features,
+        [("n_chains", pa.int64()), ("n_chain_mentions", pa.int64()),
+         ("max_chain_size", pa.int64()), ("mean_chain_size", pa.float64())],
+        id_col, text_col)
 
 
 def duck_coref_cte(from_tbl: str, text_col: str = "text") -> str:
     """DuckDB CTE chain (no leading WITH) ending in `cm`: one row per
     chain mention with doc_id, chain_id, key, label, sent_index, tok_beg,
     tok_end (0-based, ner shape), chain_size — and `cch` (doc_id, key,
-    chain_size) for per-doc aggregation. Same rule tables as the Spark
-    side (dense_rank over sorted keys == array_position in the sorted
-    qualifying key array)."""
+    chain_size) for per-doc aggregation. Same rule tables as
+    _doc_mentions/_chain_rows (dense_rank over sorted keys == the rank in
+    the sorted qualifying-key list)."""
     sents = sentence_words_sql(text_col, "duck")
     ty = ner.token_types_sql("ws", "duck")
     ments = ner.ner_mentions_sql("ty", "duck")
-    key = mention_key_sql("ws", "m", "duck")
+    key = mention_key_sql("ws", "m")
     return f"""
 cs0 AS (SELECT doc_id, {sents} AS sents FROM {from_tbl}),
 cs1 AS (SELECT doc_id, unnest(list_transform(range(1, len(sents) + 1),

@@ -25,20 +25,22 @@ The graft contract (each rule hand-checkable against the reference shape):
     exactly the reference's anon-token-map, which attaches :operator
     only when the token heads an operator.
 
-Scale shape: per-row array computation over let-bound sentence arrays —
-one Catalyst projection (array form) or one declared Arrow batch
-stage (exploded row form, r6). The polarity count
-scans a once-per-sentence bound negation-position array — O(n * #negs)
-per sentence, never corpus-dependent.
+Scale shape: one declared Arrow batch stage per surface (the token rows
+and the per-doc aggregates), both driven by one per-sentence rule
+function. The polarity is a running negation count over the sentence —
+O(n) per sentence, never corpus-dependent. The DuckDB CTE renders the
+same rule tables as the independent oracle.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.functions.text import map_text_rows
 from clj_nlp_parse_spark.operators.features import sentence_words_sql
-from clj_nlp_parse_spark.operators.trees import _in, _spark_let
+from clj_nlp_parse_spark.operators.trees import _in
 
 #: downward-monotone operators: flip polarity over the rest of the
 #: sentence. KEEP SORTED — _in renders the tuple verbatim and the
@@ -48,52 +50,21 @@ NEGATION_WORDS = ("neither", "never", "no", "nor", "not", "without")
 QUANTIFIER_WORDS = ("all", "each", "every", "many", "most", "some")
 
 
-def neg_positions_sql(ws: str, d: str = "spark") -> str:
-    """1-based positions of negation tokens in the bound word array `ws`
-    — computed ONCE per sentence so the per-token polarity scan is over
-    the (short) operator list, not a re-sliced prefix of the sentence:
-    O(n * #negations) instead of O(n^2)."""
-    if d == "spark":
-        return (f"CASE WHEN size({ws}) = 0 THEN array() ELSE "
-                f"filter(sequence(1, size({ws})), j -> "
-                f"{_in(f'try_element_at({ws}, j)', NEGATION_WORDS)}) END")
+def neg_positions_sql(ws: str) -> str:
+    """DuckDB: 1-based positions of negation tokens in the bound word
+    array `ws` — computed ONCE per sentence so the per-token polarity
+    count is over the (short) operator list, not a re-sliced prefix of
+    the sentence."""
     return (f"list_filter(range(1, len({ws}) + 1), j -> "
             f"{_in(f'{ws}[j]', NEGATION_WORDS)})")
 
 
-def polarity_sql(np_: str, i: str, d: str = "spark") -> str:
-    """'down' iff an odd number of negation positions (bound array `np_`,
-    from neg_positions_sql) lie STRICTLY BEFORE 1-based position `i`."""
-    ln = "size" if d == "spark" else "len"
-    flt = "filter" if d == "spark" else "list_filter"
-    cnt = f"{ln}({flt}({np_}, p -> p < {i}))"
+def polarity_sql(np_: str, i: str) -> str:
+    """DuckDB: 'down' iff an odd number of negation positions (bound array
+    `np_`, from neg_positions_sql) lie STRICTLY BEFORE 1-based position
+    `i`."""
+    cnt = f"len(list_filter({np_}, p -> p < {i}))"
     return f"CASE WHEN {cnt} % 2 = 1 THEN 'down' ELSE 'up' END"
-
-
-def aligned_polarity_sql(np_: str, n: str) -> str:
-    """Token-aligned polarity ARRAY (Spark side): element i is the
-    polarity of 1-based token i. polarity_sql re-filters the negation
-    array per token — O(n * #negs), quadratic on an ALL-negation
-    sentence (r5, the _chunk_pos_index_sql precedent); this builds the
-    whole array once in O(n + #negs): between consecutive negation
-    positions the strictly-before count is constant (k-1 negations
-    precede every token in (np[k-1], np[k]]), so the array is a concat
-    of constant-polarity repeat segments plus the tail after the last
-    negation. The DuckDB oracle keeps the per-token count — same
-    parity, replayable at oracle sizes. `np_`/`n` must be bound names
-    (positions ascending — neg_positions_sql filters a sequence)."""
-    at = lambda k: f"try_element_at({np_}, {k})"
-    # try_element_at index 0 throws — guard the first segment's base
-    prev = f"CASE WHEN nk = 1 THEN 0 ELSE {at('nk - 1')} END"
-    pol = lambda cnt: (f"CASE WHEN ({cnt}) % 2 = 1 THEN 'down' "
-                       f"ELSE 'up' END")
-    segs = (f"flatten(transform(CASE WHEN size({np_}) = 0 THEN "
-            f"cast(array() as array<int>) ELSE "
-            f"sequence(1, size({np_})) END, nk -> "
-            f"array_repeat({pol('nk - 1')}, {at('nk')} - ({prev}))))")
-    tail = (f"array_repeat({pol(f'size({np_})')}, "
-            f"{n} - coalesce({at('-1')}, 0))")
-    return f"concat({segs}, {tail})"
 
 
 def operator_cols_sql(w: str, i: str, n: str) -> dict[str, str]:
@@ -128,177 +99,68 @@ NATLOG_COLS = ("sent_index", "token_index", "word", "polarity", "operator",
                "quant_beg", "quant_end", "quant_head")
 
 
-def natlog_expr(text_col: str) -> str:
-    """Spark expression: text -> per-doc array of per-token natlog structs
-    (sent_index 0-based, token_index 1-based, + NATLOG_COLS), tokens in
-    textual order."""
-    oc = operator_cols_sql("try_element_at(s0.ws, i)", "i", "size(s0.ws)")
-    row = (f"named_struct("
-           f"'sent_index', cast(s0.si - 1 as bigint), "
-           f"'token_index', cast(i as bigint), "
-           f"'word', try_element_at(s0.ws, i), "
-           f"'polarity', try_element_at(s0.pol, i), "
-           f"'operator', {oc['operator']}, "
-           + ", ".join(f"'{k}', {oc[k]}" for k in NATLOG_COLS[5:]) + ")")
-    # per-sentence: bind (si, ws, negation positions, aligned polarity)
-    # once; the polarity array is O(n + #negs) instead of a per-token
-    # re-filter (r5 — linear on all-negation sentences); sequence(1, 0)
-    # descends — guard. Nested let: pol needs the BOUND np.
-    inner = _spark_let(
-        {"si": "p0.si", "ws": "p0.ws",
-         "pol": aligned_polarity_sql("p0.np", "size(p0.ws)")},
-        f"transform(sequence(1, size(s0.ws)), i -> {row})", "s0")
-    one = _spark_let(
-        {"si": "si", "ws": "try_element_at(c0.sents, si)",
-         "np": neg_positions_sql("try_element_at(c0.sents, si)", "spark")},
-        inner, "p0")
-    seq = ("CASE WHEN size(c0.sents) = 0 THEN array() "
-           "ELSE sequence(1, size(c0.sents)) END")
-    body = f"flatten(transform({seq}, si -> {one}))"
-    return _spark_let({"sents": sentence_words_sql(text_col, "spark")},
-                      body, "c0")
+def _natlog_sentence(si: int, ws: list[str]):
+    """The rule table over sentence `si`: yields one NATLOG_COLS tuple
+    per token — 1-based token_index, polarity from the running negation
+    count, and the operator spec for operator tokens (NULLs otherwise)."""
+    n = len(ws)
+    negs = 0
+    for i, w in enumerate(ws, start=1):
+        pol = "down" if negs % 2 == 1 else "up"
+        if w in NEGATION_WORDS:
+            negs += 1
+            yield (si, i, w, pol, w, i + 1, n + 1, n + 1, n + 1,
+                   i, i + 1, i - 1)
+        elif w in QUANTIFIER_WORDS:
+            se = min(i + 2, n + 1)
+            yield (si, i, w, pol, w, i + 1, se, se, n + 1, i, i + 1, i - 1)
+        else:
+            yield (si, i, w, pol, None, None, None, None, None,
+                   None, None, None)
 
 
-def add_natlog(df: DataFrame, text_col: str = "text",
-               out_col: str = "natlog") -> DataFrame:
-    """Attach the per-token natlog array to any frame with a text column
-    — one projection, composes with every other annotator."""
-    return df.withColumn(out_col, F.expr(natlog_expr(text_col)))
+def _natlog_doc(text: str | None):
+    for si, ws in enumerate(dialect.sentence_words_py(text)):
+        yield from _natlog_sentence(si, ws)
+
+
+def natlog_rows(df: DataFrame, id_col: str = "doc_id",
+                text_col: str = "text") -> DataFrame:
+    """One row per sentence token (id_col + NATLOG_COLS), textual order,
+    as a declared Arrow batch stage. All values are ints/strings, so the
+    output is byte-identical to the DuckDB oracle (gated at both SFs)."""
+    fields = [(c, pa.string() if c in ("word", "polarity", "operator")
+               else pa.int64()) for c in NATLOG_COLS]
+    return map_text_rows(df, _natlog_doc, fields, id_col, text_col)
+
+
+def _natlog_features(text: str | None):
+    nt = no = nd = 0
+    for row in _natlog_doc(text):
+        nt += 1
+        no += row[4] is not None
+        nd += row[3] == "down"
+    return [(nt, no, nd, 0.0 if nt == 0 else float(nd) / float(nt))]
 
 
 def natlog_doc_features(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text") -> DataFrame:
     """Per-doc natlog aggregates (n_tokens, n_operators, n_down,
-    down_ratio) as a declared Arrow batch stage (r6) — one output row per
-    input doc (zero-defaults preserved), same rule tables as the array
-    form; the ratio is one double division, bit-identical in IEEE."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        splitter = re.compile("[.!?]+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o_id, o_nt, o_no, o_nd, o_r = [], [], [], [], []
-            for did, text in zip(ids, texts):
-                nt = no = nd = 0
-                for seg in splitter.split(text or ""):
-                    ws = tok.findall(seg.lower())
-                    if not ws:
-                        continue
-                    negs = 0
-                    for w in ws:
-                        nt += 1
-                        if negs % 2 == 1:
-                            nd += 1
-                        if w in NEGATION_WORDS:
-                            no += 1
-                            negs += 1
-                        elif w in QUANTIFIER_WORDS:
-                            no += 1
-                o_id.append(did)
-                o_nt.append(nt)
-                o_no.append(no)
-                o_nd.append(nd)
-                o_r.append(0.0 if nt == 0 else float(nd) / float(nt))
-            yield pa.record_batch(
-                [pa.array(o_id, pa.int64()), pa.array(o_nt, pa.int64()),
-                 pa.array(o_no, pa.int64()), pa.array(o_nd, pa.int64()),
-                 pa.array(o_r, pa.float64())],
-                names=[id_col, "n_tokens", "n_operators", "n_down",
-                       "down_ratio"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("n_tokens", T.LongType()),
-         T.StructField("n_operators", T.LongType()),
-         T.StructField("n_down", T.LongType()),
-         T.StructField("down_ratio", T.DoubleType())])
-    return inp.mapInArrow(kern, out_schema)
-
-
-def natlog_rows(df: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """One row per sentence token (id_col + NATLOG_COLS) — the exploded
-    token surface, as a DECLARED Arrow batch stage (r6 optimization,
-    guide §4: the fused-parser precedent). The SQL form built the full
-    per-doc struct array in an interpreted HOF projection and exploded it
-    through an interpreted Generate (~2.0 s at sf0.1); the kernel emits
-    the rows directly (0.65 s, byte-identical output — same [.!?]+ split,
-    [a-z0-9']+ tokens and rule tables; all values are ints/strings so
-    there is no float concern). add_natlog stays the composable
-    array-column form (natlog_features aggregates it in-row)."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        splitter = re.compile("[.!?]+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            cols = {c: [] for c in (id_col,) + NATLOG_COLS}
-            for did, text in zip(ids, texts):
-                si = -1
-                for seg in splitter.split(text or ""):
-                    ws = tok.findall(seg.lower())
-                    if not ws:
-                        continue
-                    si += 1
-                    n = len(ws)
-                    negs = 0
-                    for i, w in enumerate(ws, start=1):
-                        is_neg = w in NEGATION_WORDS
-                        is_q = w in QUANTIFIER_WORDS
-                        cols[id_col].append(did)
-                        cols["sent_index"].append(si)
-                        cols["token_index"].append(i)
-                        cols["word"].append(w)
-                        cols["polarity"].append(
-                            "down" if negs % 2 == 1 else "up")
-                        if is_neg or is_q:
-                            se = n + 1 if is_neg else min(i + 2, n + 1)
-                            cols["operator"].append(w)
-                            cols["subj_beg"].append(i + 1)
-                            cols["subj_end"].append(se)
-                            cols["obj_beg"].append(se)
-                            cols["obj_end"].append(n + 1)
-                            cols["quant_beg"].append(i)
-                            cols["quant_end"].append(i + 1)
-                            cols["quant_head"].append(i - 1)
-                        else:
-                            for c in NATLOG_COLS[4:]:
-                                cols[c].append(None)
-                        if is_neg:
-                            negs += 1
-            arrs = [pa.array(cols[id_col], pa.int64())]
-            for c in NATLOG_COLS:
-                typ = pa.string() if c in ("word", "polarity", "operator") \
-                    else pa.int64()
-                arrs.append(pa.array(cols[c], typ))
-            yield pa.record_batch(arrs, names=[id_col, *NATLOG_COLS])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col]]
-        + [T.StructField(c, T.StringType()
-                         if c in ("word", "polarity", "operator")
-                         else T.LongType()) for c in NATLOG_COLS])
-    return inp.mapInArrow(kern, out_schema)
+    down_ratio) over the natlog_rows rule core, as a declared Arrow batch
+    stage — one output row per input doc (zero defaults for docs without
+    tokens); the ratio is one double division, bit-identical in IEEE."""
+    return map_text_rows(
+        df, _natlog_features,
+        [("n_tokens", pa.int64()), ("n_operators", pa.int64()),
+         ("n_down", pa.int64()), ("down_ratio", pa.float64())],
+        id_col, text_col)
 
 
 def duck_natlog_cte(from_tbl: str, text_col: str = "text") -> str:
     """DuckDB CTE chain (no leading WITH) ending in `nl`: one row per
-    sentence token with doc_id + NATLOG_COLS, same rule tables as the
-    Spark side. sentence_words_sql guarantees non-empty word arrays, so
-    every cs row explodes to >= 1 token."""
+    sentence token with doc_id + NATLOG_COLS, same rule tables as
+    _natlog_sentence. sentence_words_sql guarantees non-empty word
+    arrays, so every cs row explodes to >= 1 token."""
     sents = sentence_words_sql(text_col, "duck")
     oc = operator_cols_sql("w", "i", "n")
     cols = ", ".join(f"{oc[k]} AS {k}" for k in NATLOG_COLS[4:])
@@ -307,11 +169,11 @@ ns0 AS (SELECT doc_id, {sents} AS sents FROM {from_tbl}),
 ns1 AS (SELECT doc_id, unnest(list_transform(range(1, len(sents) + 1),
           j -> struct_pack(si := j, ws := sents[j]))) AS sx FROM ns0),
 ns2 AS (SELECT doc_id, sx.si AS si, sx.ws AS ws,
-               {neg_positions_sql('sx.ws', 'duck')} AS np_,
+               {neg_positions_sql('sx.ws')} AS np_,
                unnest(range(1, len(sx.ws) + 1)) AS i FROM ns1),
 ns3 AS (SELECT doc_id, si, ws, np_, i, ws[i] AS w, len(ws) AS n FROM ns2),
 nl AS (SELECT doc_id, CAST(si - 1 AS BIGINT) AS sent_index,
               CAST(i AS BIGINT) AS token_index, w AS word,
-              {polarity_sql('np_', 'i', 'duck')} AS polarity,
+              {polarity_sql('np_', 'i')} AS polarity,
               {cols}
        FROM ns3)"""

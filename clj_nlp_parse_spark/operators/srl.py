@@ -25,10 +25,13 @@ tagger's rule tables.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect, schema
+from clj_nlp_parse_spark.functions.text import map_text_rows
+from clj_nlp_parse_spark.operators import trees as TR
 
 FIRST_LABEL_TOKEN_THRESHOLD = 3  # srl.clj:22-25
 
@@ -125,14 +128,14 @@ def verb_features(df: DataFrame, id_col: str = "doc_id",
                     F.expr(h).alias("elected_verb_id")))
 
 
-# ------------------------------------------------- A13 srl struct shape
+# ------------------------------------------------- A13 srl token shape
 # The reference's per-token srl map (srl.clj:143-162 mapify-parsed-
 # sentences): {id, propbank, head-id, dependency-label,
-# heads [{function-tag, dependency-label}]}. The ClearNLP MODEL stays out
-# of scope (SURVEY §2.3); this is the A6/A8/A9-style shape graft — the
-# struct is derived deterministically from the engine's dependency tree
-# (trees.py dep edges), so every field is real, traversable, and
-# oracle-checkable:
+# heads [{function-tag, dependency-label}]}, flattened to one row per
+# token. The ClearNLP MODEL stays out of scope (SURVEY §2.3); this is the
+# A6/A8/A9-style shape graft — every field is derived deterministically
+# from the engine's dependency tree (trees.py dep edges), so it is real,
+# traversable, and oracle-checkable:
 #   id               = 1-based token index (ClearNLP DEPNode.id)
 #   head_id          = dep-edge head (0 for the root token, like the
 #                      reference's artificial root node)
@@ -140,10 +143,11 @@ def verb_features(df: DataFrame, id_col: str = "doc_id",
 #   propbank         = lemma + '.01' for verb-typed tokens else NULL
 #                      (the reference's propbank sense strings, e.g.
 #                      want.01 — sense 01 is the deterministic choice)
-#   heads            = [] for the root, else one semantic-head arc whose
-#                      function tag comes from a fixed label→tag table
-#                      ('mod' → PPT [patient], 'dep' → ADV — ClearNLP's
-#                      most common tags for those attachments)
+#   function_tag     = NULL for the root (it has no head arc), else the
+#                      tag of its one semantic-head arc from a fixed
+#                      label→tag table ('mod' → PPT [patient], 'dep' →
+#                      ADV — ClearNLP's most common tags for those
+#                      attachments)
 
 def function_tag_sql(label: str) -> str:
     """Dialect-common CASE: dependency label → ClearNLP-style function
@@ -152,114 +156,40 @@ def function_tag_sql(label: str) -> str:
             f"ELSE CAST(NULL AS STRING) END")
 
 
-def propbank_sql(ws: str, tg: str, i: str, d: str = "spark") -> str:
-    """Dialect-common propbank sense string for token `i` (1-based) of
-    bound word/tag arrays: lemma.01 for verb-typed tokens, else NULL."""
-    at_w = f"try_element_at({ws}, {i})" if d == "spark" else f"{ws}[{i}]"
-    at_t = f"try_element_at({tg}, {i})" if d == "spark" else f"{tg}[{i}]"
+def propbank_sql(ws: str, tg: str, i: str) -> str:
+    """DuckDB propbank sense string for token `i` (1-based) of bound
+    word/tag arrays: lemma.01 for verb-typed tokens, else NULL."""
     tags = ", ".join(f"'{t}'" for t in schema.VERB_TAGS)
-    lem = dialect.lemma_case_expr(at_w, d)
-    return (f"CASE WHEN {at_t} IN ({tags}) THEN concat({lem}, '.01') "
+    lem = dialect.lemma_case_expr(f"{ws}[{i}]", "duck")
+    return (f"CASE WHEN {tg}[{i}] IN ({tags}) THEN concat({lem}, '.01') "
             f"ELSE CAST(NULL AS STRING) END")
 
 
-def srl_expr(words: str) -> str:
-    """Spark expression: bound word-array name -> per-doc srl array in id
-    order — array<struct<id, propbank, head_id, dependency_label,
-    heads array<struct<dependency_label, function_tag>>>> (the reference
-    srl.clj:143-162 record shape). One projection, zero shuffle."""
-    from clj_nlp_parse_spark.operators import trees as TR
-    # three-level let (review r04): tokenize ONCE (y0), tag ONCE (y1),
-    # and hand the bound tag array to tree_expr so the dep derivation
-    # does not re-tag — the engine's bind-once idiom end to end
-    ed_sorted = (f"array_sort({TR.tree_expr('y1.ws', 'dep', tags='y1.tg')}"
-                 ", (a, b) -> "
-                 "CASE WHEN a.dependent < b.dependent THEN -1 "
-                 "WHEN a.dependent > b.dependent THEN 1 ELSE 0 END)")
-    row = (f"named_struct("
-           f"'id', cast(e.dependent as bigint), "
-           f"'propbank', {propbank_sql('z.ws', 'z.tg', 'e.dependent')}, "
-           f"'head_id', cast(e.head as bigint), "
-           f"'dependency_label', e.label, "
-           f"'heads', CASE WHEN e.label = 'root' THEN "
-           f"cast(array() as array<struct<dependency_label:string, "
-           f"function_tag:string>>) ELSE array(named_struct("
-           f"'dependency_label', e.label, "
-           f"'function_tag', {function_tag_sql('e.label')})) END)")
-    body = f"transform(z.ed, e -> {row})"
-    l3 = TR._spark_let(
-        {"ws": "y1.ws", "tg": "y1.tg", "ed": ed_sorted}, body, "z")
-    l2 = TR._spark_let(
-        {"ws": "y0.ws",
-         "tg": f"transform(y0.ws, t -> "
-               f"({dialect.pos_case_expr('t', 'spark')}))"},
-        l3, "y1")
-    return TR._spark_let({"ws": words}, l2, "y0")
+_FUNCTION_TAG = {"mod": "PPT", "dep": "ADV"}
+_VERB_TAGS = frozenset(schema.VERB_TAGS)
+
+
+def _srl_rows(text: str | None) -> list[tuple]:
+    ws, tags = dialect.tagged_words_py(text)
+    rows = []
+    for hd, dep, lab in TR._dep_edges_linear(ws, tags, TR._chunks_py(tags)):
+        w = ws[dep - 1]
+        pb = dialect.lemma_py(w) + ".01" if tags[dep - 1] in _VERB_TAGS \
+            else None
+        rows.append((dep, w, hd, lab, _FUNCTION_TAG.get(lab), pb))
+    return rows
 
 
 def srl_token_rows(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """One row per token (id_col, id, word, head_id, dependency_label,
-    function_tag, propbank) — the flattened A13 surface, as a DECLARED
-    Arrow batch stage (r6 optimization, guide §4: the fused-parser
-    precedent). Same rule tables as the SQL form: dep edges from the
-    linearized chunk derivation, function tag from the fixed label→tag
-    table, propbank = lemma + '.01' for verb-tagged tokens."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from clj_nlp_parse_spark.operators import trees as TR
-
-    ftag = {"mod": "PPT", "dep": "ADV"}
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        verb_tags = frozenset(schema.VERB_TAGS)
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o = {k: [] for k in ("doc", "id", "word", "head", "lab",
-                                 "ft", "pb")}
-            for did, text in zip(ids, texts):
-                ws = tok.findall((text or "").lower())
-                tags = [dialect.pos_py(w) for w in ws]
-                edges = TR._dep_edges_linear(ws, tags, TR._chunks_py(tags))
-                for (hd, dep, lab) in edges:
-                    w = ws[dep - 1]
-                    o["doc"].append(did)
-                    o["id"].append(dep)
-                    o["word"].append(w)
-                    o["head"].append(hd)
-                    o["lab"].append(lab)
-                    o["ft"].append(ftag.get(lab))
-                    o["pb"].append(dialect.lemma_py(w) + ".01"
-                                   if tags[dep - 1] in verb_tags else None)
-            yield pa.record_batch(
-                [pa.array(o["doc"], pa.int64()),
-                 pa.array(o["id"], pa.int64()), pa.array(o["word"]),
-                 pa.array(o["head"], pa.int64()), pa.array(o["lab"]),
-                 pa.array(o["ft"], pa.string()),
-                 pa.array(o["pb"], pa.string())],
-                names=[id_col, "id", "word", "head_id",
-                       "dependency_label", "function_tag", "propbank"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("id", T.LongType()),
-         T.StructField("word", T.StringType()),
-         T.StructField("head_id", T.LongType()),
-         T.StructField("dependency_label", T.StringType()),
-         T.StructField("function_tag", T.StringType()),
-         T.StructField("propbank", T.StringType())])
-    return inp.mapInArrow(kern, out_schema)
-
-
-def add_srl(df: DataFrame, text_col: str = "text",
-            out_col: str = "srl") -> DataFrame:
-    """Attach the per-token srl struct array to any frame with a text
-    column — composes with every other annotator, zero shuffle."""
-    words = dialect.tokens_expr(text_col, "spark")
-    return df.withColumn(out_col, F.expr(srl_expr(words)))
+    function_tag, propbank) — the flattened A13 surface, as a declared
+    Arrow batch stage: dep edges from the linearized chunk derivation,
+    function tag from the fixed label→tag table (NULL for the root),
+    propbank = lemma + '.01' for verb-tagged tokens."""
+    return map_text_rows(
+        df, _srl_rows,
+        [("id", pa.int64()), ("word", pa.string()),
+         ("head_id", pa.int64()), ("dependency_label", pa.string()),
+         ("function_tag", pa.string()), ("propbank", pa.string())],
+        id_col, text_col)

@@ -36,11 +36,13 @@ zero joins, zero shuffles — identical SQL rendered for Spark and DuckDB.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect
 from clj_nlp_parse_spark.dialect import _q
+from clj_nlp_parse_spark.functions.text import map_text_rows
 from clj_nlp_parse_spark.operators.chunking import (
     NP_HEAD_TAGS, NP_TAGS, VP_HEAD_TAGS, VP_TAGS)
 
@@ -410,111 +412,56 @@ def _dep_edges_linear(ws: list[str], tags: list[str],
     return out
 
 
+def _dep_rows(text: str | None) -> list[tuple[int, int, str]]:
+    ws, tags = dialect.tagged_words_py(text)
+    return _dep_edges_linear(ws, tags, _chunks_py(tags))
+
+
 def dep_edge_rows(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """Exploded dependency edge rows (id_col, head, dependent, label) as
-    a DECLARED Arrow batch stage (r6 optimization, guide §4: the
-    fused-parser precedent) — same rule tables as dep_tree_edges' SQL
-    form (fuzz-pinned twin algorithm, linearized chunk lookup), emitted
-    directly instead of HOF-array-build + interpreted Generate."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
+    a declared Arrow batch stage — same rule tables as dep_tree_edges'
+    SQL form (fuzz-pinned twin algorithm, linearized chunk lookup),
+    emitted directly instead of HOF-array-build + interpreted Generate."""
+    return map_text_rows(
+        df, _dep_rows,
+        [("head", pa.int64()), ("dependent", pa.int64()),
+         ("label", pa.string())],
+        id_col, text_col)
 
-    from clj_nlp_parse_spark import dialect as dlect
 
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o_id, o_h, o_d, o_l = [], [], [], []
-            for did, text in zip(ids, texts):
-                ws = tok.findall((text or "").lower())
-                tags = [dlect.pos_py(w) for w in ws]
-                for (hd, dep, lab) in _dep_edges_linear(
-                        ws, tags, _chunks_py(tags)):
-                    o_id.append(did)
-                    o_h.append(hd)
-                    o_d.append(dep)
-                    o_l.append(lab)
-            yield pa.record_batch(
-                [pa.array(o_id, pa.int64()), pa.array(o_h, pa.int64()),
-                 pa.array(o_d, pa.int64()), pa.array(o_l, pa.string())],
-                names=[id_col, "head", "dependent", "label"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("head", T.LongType()),
-         T.StructField("dependent", T.LongType()),
-         T.StructField("label", T.StringType())])
-    return inp.mapInArrow(kern, out_schema)
+def _parse_tree_rows(text: str | None) -> list[tuple]:
+    ws, tags = dialect.tagged_words_py(text)
+    ch = _chunks_py(tags)
+    tok2beg: list[int | None] = [None] * len(ws)
+    for c in ch:
+        for k in range(c["beg"], c["fin"]):
+            tok2beg[k] = c["beg"]
+    out = [(-1, 0, "ROOT", None), (0, 1, "S", None)]
+    for c in ch:
+        parent = 2 + 3 * c["pvp"] if c["pvp"] is not None else 1
+        out.append((parent, 2 + 3 * c["beg"], c["label"], None))
+    for i in range(1, len(ws) + 1):
+        beg = tok2beg[i - 1]
+        out.append((2 + 3 * beg if beg is not None else 1,
+                    3 * i, tags[i - 1], i))
+    for i in range(1, len(ws) + 1):
+        out.append((3 * i, 3 * i + 1, ws[i - 1], i))
+    return out
 
 
 def parse_tree_edge_rows(df: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text") -> DataFrame:
     """Exploded constituency edge rows (id_col, parent, child, label,
-    token_index) as a DECLARED Arrow batch stage (r6) — the exact
-    edges_sql numbering: ROOT(-1→0), S(0→1), chunk nodes at 2+3*beg
-    (parent S, or the preceding VP for object-attached NPs), preterminals
-    at 3i (parent = containing chunk or S), leaves at 3i+1."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    from clj_nlp_parse_spark import dialect as dlect
-
-    def kern(batches):
-        import re
-        tok = re.compile("[a-z0-9']+")
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            texts = batch.column(text_col).to_pylist()
-            o_id, o_p, o_c, o_l, o_t = [], [], [], [], []
-
-            def emit(did, p, c, lab, ti):
-                o_id.append(did)
-                o_p.append(p)
-                o_c.append(c)
-                o_l.append(lab)
-                o_t.append(ti)
-
-            for did, text in zip(ids, texts):
-                ws = tok.findall((text or "").lower())
-                tags = [dlect.pos_py(w) for w in ws]
-                ch = _chunks_py(tags)
-                tok2beg: list[int | None] = [None] * len(ws)
-                for c in ch:
-                    for k in range(c["beg"], c["fin"]):
-                        tok2beg[k] = c["beg"]
-                emit(did, -1, 0, "ROOT", None)
-                emit(did, 0, 1, "S", None)
-                for c in ch:
-                    parent = (2 + 3 * c["pvp"]
-                              if c["pvp"] is not None else 1)
-                    emit(did, parent, 2 + 3 * c["beg"], c["label"], None)
-                for i in range(1, len(ws) + 1):
-                    beg = tok2beg[i - 1]
-                    emit(did, 2 + 3 * beg if beg is not None else 1,
-                         3 * i, tags[i - 1], i)
-                for i in range(1, len(ws) + 1):
-                    emit(did, 3 * i, 3 * i + 1, ws[i - 1], i)
-            yield pa.record_batch(
-                [pa.array(o_id, pa.int64()), pa.array(o_p, pa.int64()),
-                 pa.array(o_c, pa.int64()), pa.array(o_l, pa.string()),
-                 pa.array(o_t, pa.int64())],
-                names=[id_col, "parent", "child", "label", "token_index"])
-
-    from clj_nlp_parse_spark.functions.text import spread_small_input
-    inp = spread_small_input(df.select(id_col, text_col))
-    out_schema = T.StructType(
-        [inp.schema[id_col],
-         T.StructField("parent", T.LongType()),
-         T.StructField("child", T.LongType()),
-         T.StructField("label", T.StringType()),
-         T.StructField("token_index", T.LongType())])
-    return inp.mapInArrow(kern, out_schema)
+    token_index) as a declared Arrow batch stage — the exact edges_sql
+    numbering: ROOT(-1→0), S(0→1), chunk nodes at 2+3*beg (parent S, or
+    the preceding VP for object-attached NPs), preterminals at 3i
+    (parent = containing chunk or S), leaves at 3i+1."""
+    return map_text_rows(
+        df, _parse_tree_rows,
+        [("parent", pa.int64()), ("child", pa.int64()),
+         ("label", pa.string()), ("token_index", pa.int64())],
+        id_col, text_col)
 
 
 def _chunks_py(tags: list[str]) -> list[dict]:

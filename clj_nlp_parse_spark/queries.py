@@ -3173,10 +3173,10 @@ def q_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     config.clj:200-204): mentions clustered across sentences by exact
     lemma match, one row per chain mention in textual order with the
     reference's sent-index / token-range / head-index shape. Per-doc
-    array computation — one projection, zero shuffle (coref.py)."""
+    clustering in one declared mapInArrow stage behind
+    spread_small_input (coref.coref_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
-    # r6: exploded chain-mention surface via the declared Arrow kernel
     return (CRF.coref_rows(docs)
             .repartition(1).sortWithinPartitions(
                 "doc_id", "chain_id", "sent_index", "token_beg"))
@@ -3200,10 +3200,10 @@ def q_coref_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 feature consumer: per-doc chain count/size stats from the
     coref column (the chain-count/size features a reference pipeline
     derives from coref-tree-to-map's output). Zero-default rows for
-    chainless docs; still one projection, zero shuffle."""
+    chainless docs; one declared mapInArrow stage behind
+    spread_small_input (coref.coref_doc_features)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
-    # r6: per-doc aggregates via the declared Arrow kernel
     return (CRF.coref_doc_features(docs)
             .repartition(1).sortWithinPartitions("doc_id"))
 
@@ -3222,11 +3222,10 @@ def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     anon-token-map, config.clj:179-187): per-token {operator, polarity}
     from the deterministic monotonicity rule table — negations flip
     polarity over the rest of the sentence, operators carry the
-    reference's operator-spec ranges. One projection, zero shuffle
-    (natlog.py)."""
+    reference's operator-spec ranges. One declared mapInArrow stage
+    behind spread_small_input (natlog.natlog_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
-    # r6: exploded token surface via the declared Arrow kernel
     return (NLG.natlog_rows(docs)
             .repartition(1).sortWithinPartitions(
                 "doc_id", "sent_index", "token_index"))
@@ -3248,12 +3247,12 @@ def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN nagg USING (doc_id) ORDER BY doc_id""",
 )
 def q_natlog_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10 feature consumer: per-doc operator/polarity stats from the
-    natlog column. Zero-default rows for empty docs; one projection,
-    zero shuffle."""
+    """A10 feature consumer: per-doc operator/polarity stats over the
+    natlog token rule. Zero-default rows for empty docs; one declared
+    mapInArrow stage behind spread_small_input
+    (natlog.natlog_doc_features)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
-    # r6: per-doc aggregates via the declared Arrow kernel
     return (NLG.natlog_doc_features(docs)
             .repartition(1).sortWithinPartitions("doc_id"))
 
@@ -3281,7 +3280,7 @@ from clj_nlp_parse_spark.operators import trees as TR2
            CAST(e.head AS BIGINT) AS head_id,
            e.label AS dependency_label,
            {SRL.function_tag_sql('e.label')} AS function_tag,
-           {SRL.propbank_sql('words', 'tg', 'e.dependent', 'duck')}
+           {SRL.propbank_sql('words', 'tg', 'e.dependent')}
              AS propbank
     FROM ed ORDER BY doc_id, id""",
 )
@@ -3291,11 +3290,11 @@ def q_srl_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency-label / function-tag / propbank, derived deterministically
     from the engine's dependency tree (the ClearNLP model stays out of
     scope — SURVEY §2.3). Same in-query verb derivation as np_vp_chunks
-    (_CHUNK_TEXT) so VP heads and propbank senses are exercised. Pure
-    per-row array computation, zero shuffle."""
+    (_CHUNK_TEXT) so VP heads and propbank senses are exercised. One
+    declared mapInArrow stage behind spread_small_input
+    (srl.srl_token_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
-    # r6: flattened token surface via the declared Arrow kernel
     return (SRL.srl_token_rows(docs)
             .repartition(1).sortWithinPartitions("doc_id", "id"))
 

@@ -2,11 +2,11 @@
 reference's documented semantics (stanford.clj:407-421 coref-tree-to-map,
 stanford.clj:434-452 anon-operator-map/anon-token-map,
 doc/annotation-definitions.md) — NOT from the dual-rendered SQL, so the
-oracle gate and these tests fail independently (VERDICT_r03 #7)."""
+oracle gate and these tests fail independently (VERDICT_r03 #7). They run
+the Arrow kernels the registered queries run (coref_rows, natlog_rows and
+the two per-doc feature kernels)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark.operators import coref as CRF
 from clj_nlp_parse_spark.operators import natlog as NLG
@@ -30,10 +30,9 @@ def test_coref_chains_golden(spark):
                           "the customer spark waits . "
                           "scan merge not scan")
     rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.label",
-                    "c.sent_index", "c.token_beg", "c.token_end",
-                    "c.head_index", "c.chain_size")
+            CRF.coref_rows(doc).orderBy("sent_index", "token_beg")
+            .select("chain_id", "mention_key", "label", "sent_index",
+                    "token_beg", "token_end", "head_index", "chain_size")
             .collect()]
     want = [  # textual order
         (1, "customer spark", "ORGANIZATION", 0, 1, 3, 2, 2),
@@ -49,9 +48,8 @@ def test_coref_lemma_match_clusters_inflections(spark):
     # though their surface forms differ (exact text/lemma match rule)
     doc = _one_doc(spark, "scan waits . scans run")
     rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.sent_index")
-            .collect()]
+            CRF.coref_rows(doc).orderBy("sent_index", "token_beg")
+            .select("chain_id", "mention_key", "sent_index").collect()]
     assert rows == [(1, "scan", 0), (1, "scan", 1)]
 
 
@@ -60,8 +58,7 @@ def test_coref_empty_and_no_chain_docs(spark):
         [(1, ""), (2, None), (3, "..!!"), (4, "customer only once"),
          (5, "xyzzy xyzzy")],  # 5: repeated but not a gazetteer mention
         "doc_id long, text string")
-    out = {r.doc_id: r.coref for r in CRF.add_coref(docs).collect()}
-    assert all(out[i] == [] for i in (1, 2, 3, 4, 5))
+    assert CRF.coref_rows(docs).collect() == []
 
 
 def test_coref_adjacent_same_type_is_one_mention_not_two(spark):
@@ -69,18 +66,10 @@ def test_coref_adjacent_same_type_is_one_mention_not_two(spark):
     # "scan merge" occurrences then chain with each other
     doc = _one_doc(spark, "scan merge waits . scan merge runs")
     rows = [tuple(r) for r in
-            CRF.add_coref(doc).select(F.explode("coref").alias("c"))
-            .select("c.chain_id", "c.mention_key", "c.token_beg",
-                    "c.token_end", "c.chain_size").collect()]
+            CRF.coref_rows(doc).orderBy("sent_index", "token_beg")
+            .select("chain_id", "mention_key", "token_beg", "token_end",
+                    "chain_size").collect()]
     assert rows == [(1, "scan merge", 1, 3, 2), (1, "scan merge", 1, 3, 2)]
-
-
-def test_coref_plan_is_pure_projection(spark):
-    # per-doc clustering → zero shuffle, zero Python
-    doc = _one_doc(spark, "customer . customer")
-    plan = CRF.add_coref(doc)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
 # --------------------------------------------------------------- A10 natlog
@@ -90,8 +79,7 @@ def test_natlog_polarity_golden(spark):
     #   never: 1 → down; fast: 2 → up (nested negations cancel)
     doc = _one_doc(spark, "scan not slow never fast . all big table")
     rows = {(r.sent_index, r.token_index): r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+            NLG.natlog_rows(doc).collect()}
     pol = {k: v.polarity for k, v in rows.items()}
     assert pol == {(0, 1): "up", (0, 2): "up", (0, 3): "down",
                    (0, 4): "down", (0, 5): "up",
@@ -104,8 +92,7 @@ def test_natlog_negation_operator_spec_golden(spark):
     # remaining scope [3,6), object empty [6,6), head = 1 (0-based)
     doc = _one_doc(spark, "scan not slow never fast")
     rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+            NLG.natlog_rows(doc).collect()}
     nt = rows[2]
     assert (nt.word, nt.operator) == ("not", "not")
     assert (nt.quant_beg, nt.quant_end, nt.quant_head) == (2, 3, 1)
@@ -122,8 +109,7 @@ def test_natlog_quantifier_operator_spec_golden(spark):
     # token [2,3), object = body [3,4), quant range [1,2), head 0
     doc = _one_doc(spark, "every big table")
     rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+            NLG.natlog_rows(doc).collect()}
     ev = rows[1]
     assert ev.operator == "every"
     assert (ev.subj_beg, ev.subj_end) == (2, 3)
@@ -138,8 +124,7 @@ def test_natlog_quantifier_at_sentence_end_ranges_clamp(spark):
     # subject [n+1, n+1) and object [n+1, n+1) are both empty, not OOB
     doc = _one_doc(spark, "table all")
     rows = {r.token_index: r for r in
-            NLG.add_natlog(doc).select(F.explode("natlog").alias("t"))
-            .select("t.*").collect()}
+            NLG.natlog_rows(doc).collect()}
     al = rows[2]
     assert (al.subj_beg, al.subj_end) == (3, 3)
     assert (al.obj_beg, al.obj_end) == (3, 3)
@@ -148,16 +133,7 @@ def test_natlog_quantifier_at_sentence_end_ranges_clamp(spark):
 def test_natlog_empty_docs(spark):
     docs = spark.createDataFrame(
         [(1, ""), (2, None), (3, "?!")], "doc_id long, text string")
-    out = {r.doc_id: r.natlog for r in NLG.add_natlog(docs).collect()}
-    assert all(out[i] == [] for i in (1, 2, 3))
-
-
-def test_natlog_plan_is_pure_projection(spark):
-    doc = _one_doc(spark, "not scan")
-    plan = (NLG.add_natlog(doc)._jdf.queryExecution().executedPlan()
-            .toString())
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+    assert NLG.natlog_rows(docs).collect() == []
 
 
 # ------------------------------------------------------------ Python twins
@@ -234,24 +210,45 @@ _VOCAB = (
 )
 
 
+def _coref_features_py(rows):
+    """Per-doc chain aggregates of coref_py rows; zeros without chains."""
+    sizes = {r[0]: r[7] for r in rows}
+    nc, nm = len(sizes), sum(sizes.values())
+    return (nc, nm, max(sizes.values(), default=0),
+            0.0 if nc == 0 else nm / nc)
+
+
+def _natlog_features_py(rows):
+    """Per-doc token aggregates of natlog_py rows; zeros without tokens."""
+    nt = len(rows)
+    nd = sum(r[3] == "down" for r in rows)
+    return (nt, sum(r[4] is not None for r in rows), nd,
+            0.0 if nt == 0 else nd / nt)
+
+
 def _twin_compare(spark, texts):
-    from pyspark.sql import functions as F
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    got_c = sorted(
-        (r.doc_id,) + tuple(r.c) for r in
-        CRF.add_coref(df).select("doc_id", F.explode("coref").alias("c"))
-        .collect())
-    want_c = sorted((i,) + row for i, t in enumerate(texts)
-                    for row in coref_py(t))
+    # (doc_id, sent_index, token_beg) / (doc_id, sent_index, token_index)
+    c_key = lambda r: (r[0], r[4], r[5])
+    n_key = lambda r: r[:3]
+    got_c = sorted((tuple(r) for r in CRF.coref_rows(df).collect()),
+                   key=c_key)
+    want_c = sorted(((i,) + row for i, t in enumerate(texts)
+                     for row in coref_py(t)), key=c_key)
     assert got_c == want_c
-    got_n = sorted(
-        (r.doc_id,) + tuple(r.t) for r in
-        NLG.add_natlog(df).select("doc_id", F.explode("natlog").alias("t"))
-        .collect())
-    want_n = sorted((i,) + row for i, t in enumerate(texts)
-                    for row in natlog_py(t))
+    got_n = sorted((tuple(r) for r in NLG.natlog_rows(df).collect()),
+                   key=n_key)
+    want_n = sorted(((i,) + row for i, t in enumerate(texts)
+                     for row in natlog_py(t)), key=n_key)
     assert got_n == want_n
+    # the per-doc kernels: one row per doc, equal to the twins' aggregates
+    got_cf = sorted(tuple(r) for r in CRF.coref_doc_features(df).collect())
+    assert got_cf == [(i,) + _coref_features_py(coref_py(t))
+                      for i, t in enumerate(texts)]
+    got_nf = sorted(tuple(r) for r in NLG.natlog_doc_features(df).collect())
+    assert got_nf == [(i,) + _natlog_features_py(natlog_py(t))
+                      for i, t in enumerate(texts)]
 
 
 def test_coref_natlog_python_twin_seeded(spark):
@@ -323,23 +320,3 @@ def test_coref_natlog_python_twin_hypothesis_sentenceless(spark):
         _twin_compare(spark, [text, " . ".join(parts)])
 
     check()
-
-
-def test_aligned_polarity_segments(spark):
-    # direct pin of the r5 aligned-polarity array: no negations,
-    # negation first, negation last, all negations, empty sentence
-    from clj_nlp_parse_spark.operators.natlog import aligned_polarity_sql
-
-    def arr(np_lit, n):
-        return spark.sql(
-            f"SELECT {aligned_polarity_sql(np_lit, str(n))} AS a"
-        ).collect()[0].a
-
-    assert arr("cast(array() as array<int>)", 3) == ["up"] * 3
-    # neg at position 1: token 1 itself is 'up' (strictly before), rest down
-    assert arr("array(1)", 4) == ["up", "down", "down", "down"]
-    # neg at the last position flips nothing visible
-    assert arr("array(4)", 4) == ["up", "up", "up", "up"]
-    # all four tokens negations: parity alternates
-    assert arr("array(1,2,3,4)", 4) == ["up", "down", "up", "down"]
-    assert arr("cast(array() as array<int>)", 0) == []

@@ -76,19 +76,20 @@ def test_srl_struct_shape_golden(spark):
     from clj_nlp_parse_spark.operators import srl as S
     df = spark.createDataFrame([(1, "scan is running quickly")],
                                "doc_id long, text string")
-    rows = {t.id: t for t in S.add_srl(df).collect()[0].srl}
-    # ids are 1..n, exactly one root with head 0 and empty heads
+    rows = {t.id: t for t in S.srl_token_rows(df).collect()}
+    # ids are 1..n, exactly one root with head 0 and no head arc (NULL
+    # function tag)
     assert sorted(rows) == [1, 2, 3, 4]
+    assert [t.word for _, t in sorted(rows.items())] == \
+        ["scan", "is", "running", "quickly"]
     roots = [t for t in rows.values() if t.dependency_label == "root"]
     assert len(roots) == 1 and roots[0].head_id == 0
-    assert roots[0].heads == []
-    # every non-root has exactly one semantic-head arc whose labels match
+    assert roots[0].function_tag is None
+    # every non-root's one semantic-head arc carries its label's tag
     for t in rows.values():
         if t.dependency_label == "root":
             continue
-        assert len(t.heads) == 1
-        assert t.heads[0].dependency_label == t.dependency_label
-        assert t.heads[0].function_tag == {
+        assert t.function_tag == {
             "mod": "PPT", "dep": "ADV"}[t.dependency_label]
     # propbank: verb-typed tokens carry lemma.01, others NULL
     assert rows[2].propbank == "be.01"       # is → irregular lemma be
@@ -104,14 +105,8 @@ def test_srl_struct_empty_and_degenerate(spark):
     df = spark.createDataFrame(
         [(1, ""), (2, None), (3, "?!"), (4, "word")],
         "doc_id long, text string")
-    out = {r.doc_id: r.srl for r in S.add_srl(df).collect()}
-    assert out[1] == [] and out[2] == [] and out[3] == []
-    assert len(out[4]) == 1 and out[4][0].dependency_label == "root"
-
-
-def test_srl_struct_plan_is_pure_projection(spark):
-    from clj_nlp_parse_spark.operators import srl as S
-    df = spark.createDataFrame([(1, "scan runs")], "doc_id long, text string")
-    plan = S.add_srl(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
+    rows = S.srl_token_rows(df).collect()
+    # docs without tokens emit no rows; the one-token doc is its root
+    assert [r.doc_id for r in rows] == [4]
+    assert rows[0].dependency_label == "root" and rows[0].head_id == 0
+    assert rows[0].function_tag is None

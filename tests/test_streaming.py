@@ -555,10 +555,10 @@ def test_streaming_asof_buffered_timeout_flush_via_other_key(spark, tmp_path):
 
 
 def test_streaming_coref_natlog_match_batch(spark, tmp_path):
-    # the A12/A10 annotators are pure Catalyst projections, so they run on
-    # a stream UNCHANGED — availableNow over a file source must reproduce
-    # the batch chains/polarity exactly (the composability contract every
-    # zero-shuffle annotator in this engine keeps)
+    # the A12/A10 kernels are per-doc mapInArrow stages, so they run on a
+    # stream unchanged (spread_small_input leaves a streaming frame
+    # alone) — availableNow over a file source must reproduce the batch
+    # chains/polarity exactly
     from clj_nlp_parse_spark.operators import coref as CRF
     from clj_nlp_parse_spark.operators import natlog as NLG
     docs = spark.createDataFrame(
@@ -572,56 +572,27 @@ def test_streaming_coref_natlog_match_batch(spark, tmp_path):
 
     sink_c = str(tmp_path / "cn_coref")
     ST.run_available_now_to_parquet(
-        CRF.add_coref(sdf).select(
-            "doc_id", F.explode("coref").alias("c")).select("doc_id", "c.*"),
-        sink_c, str(tmp_path / "cn_coref_ckpt"))
+        CRF.coref_rows(sdf), sink_c, str(tmp_path / "cn_coref_ckpt"))
     got_c = sorted(tuple(r) for r in spark.read.parquet(sink_c).collect())
-    want_c = sorted(tuple(r) for r in
-                    CRF.add_coref(docs).select(
-                        "doc_id", F.explode("coref").alias("c"))
-                    .select("doc_id", "c.*").collect())
+    want_c = sorted(tuple(r) for r in CRF.coref_rows(docs).collect())
     assert got_c == want_c and len(got_c) == 2  # doc 1's chain
 
     sink_n = str(tmp_path / "cn_natlog")
     ST.run_available_now_to_parquet(
-        NLG.add_natlog(sdf).select(
-            "doc_id", F.explode("natlog").alias("t")).select("doc_id", "t.*"),
-        sink_n, str(tmp_path / "cn_natlog_ckpt"))
-    got_n = sorted(tuple(r) for r in spark.read.parquet(sink_n).collect())
-    want_n = sorted(tuple(r) for r in
-                    NLG.add_natlog(docs).select(
-                        "doc_id", F.explode("natlog").alias("t"))
-                    .select("doc_id", "t.*").collect())
+        NLG.natlog_rows(sdf), sink_n, str(tmp_path / "cn_natlog_ckpt"))
+    key = lambda r: r[:3]  # (doc_id, sent_index, token_index)
+    got_n = sorted((tuple(r) for r in spark.read.parquet(sink_n).collect()),
+                   key=key)
+    want_n = sorted((tuple(r) for r in NLG.natlog_rows(docs).collect()),
+                    key=key)
     assert got_n == want_n and len(got_n) == 14  # 6 + 8 tokens
 
 
 def test_streaming_srl_tokens_match_batch(spark, tmp_path):
-    # A13: the SRL token struct (dependency label → function tag →
-    # propbank sense) is derived from the dep tree, itself a pure
-    # Catalyst projection — so the whole surface streams UNCHANGED
-    # (VERDICT_r04 #7, completing the annotator set with coref/natlog)
-    from clj_nlp_parse_spark import dialect
+    # A13: the SRL token kernel (dependency label → function tag →
+    # propbank sense) streams unchanged, completing the annotator set
+    # with coref/natlog (VERDICT_r04 #7)
     from clj_nlp_parse_spark.operators import srl as SRL
-    from clj_nlp_parse_spark.operators import trees as TR
-
-    def srl_cols(df):
-        d = (df
-             .withColumn("ws", F.expr(dialect.tokens_expr("text", "spark")))
-             .withColumn("tg", F.expr(
-                 f"transform(ws, t -> "
-                 f"({dialect.pos_case_expr('t', 'spark')}))"))
-             .select("doc_id", "ws", "tg",
-                     F.explode(F.expr(TR.tree_expr("ws", "dep", tags="tg")))
-                     .alias("e")))
-        return d.select(
-            "doc_id",
-            F.col("e.dependent").cast("long").alias("id"),
-            F.expr("try_element_at(ws, e.dependent)").alias("word"),
-            F.col("e.head").cast("long").alias("head_id"),
-            F.col("e.label").alias("dependency_label"),
-            F.expr(SRL.function_tag_sql("e.label")).alias("function_tag"),
-            F.expr(SRL.propbank_sql("ws", "tg", "e.dependent", "spark"))
-            .alias("propbank"))
 
     docs = spark.createDataFrame(
         [(1, "the customer is running quickly . scan waits"),
@@ -632,9 +603,12 @@ def test_streaming_srl_tokens_match_batch(spark, tmp_path):
     sdf = spark.readStream.schema(docs.schema).parquet(p)
     sink = str(tmp_path / "srl_sink")
     ST.run_available_now_to_parquet(
-        srl_cols(sdf), sink, str(tmp_path / "srl_ckpt"))
-    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
-    want = sorted(tuple(r) for r in srl_cols(docs).collect())
+        SRL.srl_token_rows(sdf), sink, str(tmp_path / "srl_ckpt"))
+    key = lambda r: r[:2]  # (doc_id, id)
+    got = sorted((tuple(r) for r in spark.read.parquet(sink).collect()),
+                 key=key)
+    want = sorted((tuple(r) for r in SRL.srl_token_rows(docs).collect()),
+                  key=key)
     assert got == want and len(got) >= 10
 
 

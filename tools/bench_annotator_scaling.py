@@ -8,10 +8,10 @@ JVMs x 4 cores covering all four shards of the same input.
 Efficiency = aggregate_throughput_4N / (4 * throughput_N).
 
 Why not local[4] vs local[16] in one JVM (the first r5 attempt,
-recorded in BENCH.md): these annotators are allocation-heavy array
-expressions; inside ONE shared-heap JVM, 16 concurrent tasks contend
-for the single allocator/GC and memory bus, and the measured 0.34-0.55
-"efficiency" is that contention, not the engine — the same host's
+recorded in BENCH.md, when these annotators were allocation-heavy
+Catalyst array expressions): inside ONE shared-heap JVM, 16 concurrent
+tasks contend for the single allocator/GC and memory bus, and the
+measured 0.34-0.55 "efficiency" is that contention, not the engine — the same host's
 CONTROL workload (md5+hashagg) thread-scales at 0.72 and the
 separate-process image harness reaches 0.87. A real 4N-executor
 cluster adds a memory bus per executor, which the multi-process shape
@@ -69,11 +69,9 @@ sys.path.insert(0, sys.argv[5])
 cpus = int(sys.argv[1]); sf_dir = sys.argv[2]
 shard = int(sys.argv[3]); n_shards = int(sys.argv[4])
 from pyspark.sql import functions as F
-from clj_nlp_parse_spark import dialect
 from clj_nlp_parse_spark.operators import coref as CRF
 from clj_nlp_parse_spark.operators import natlog as NLG
 from clj_nlp_parse_spark.operators import srl as SRL
-from clj_nlp_parse_spark.operators import trees as TR
 from clj_nlp_parse_spark.session import get_spark
 spark = get_spark(app_name=f"annot-scale-{cpus}-s{shard}",
                   parallelism=cpus, shuffle_partitions=cpus)
@@ -81,34 +79,15 @@ docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
         .where(F.col("doc_id") % n_shards == shard)
         .select("doc_id", "text"))
 
-# The OPERATOR projections, not the registered queries: the registry
-# appends a presentation orderBy for oracle determinism, whose range
-# partitioner runs a sampling pass that computes the projection a second
-# time per action — a measurement artifact, not part of the annotator's
-# scale posture (a 100 TB pipeline consumes the columns, it does not
-# globally sort the corpus for display).
-def srl_cols(df):
-    d = (df.withColumn("ws", F.expr(dialect.tokens_expr("text", "spark")))
-         .withColumn("tg", F.expr(
-             f"transform(ws, t -> ({dialect.pos_case_expr('t', 'spark')}))"))
-         .select("doc_id", "ws", "tg",
-                 F.explode(F.expr(TR.tree_expr("ws", "dep", tags="tg")))
-                 .alias("e")))
-    return d.select(
-        "doc_id", F.col("e.dependent").cast("long").alias("id"),
-        F.expr("try_element_at(ws, e.dependent)").alias("word"),
-        F.col("e.head").cast("long").alias("head_id"),
-        F.col("e.label").alias("dependency_label"),
-        F.expr(SRL.function_tag_sql("e.label")).alias("function_tag"),
-        F.expr(SRL.propbank_sql("ws", "tg", "e.dependent", "spark"))
-        .alias("propbank"))
-
+# The OPERATOR kernels the registered queries run, not the queries
+# themselves: the registry appends a presentation sort for oracle
+# determinism, which is not part of the annotator's scale posture (a
+# 100 TB pipeline consumes the rows, it does not globally sort the
+# corpus for display).
 PLANS = {
-    "coref_chains": CRF.add_coref(docs).select(
-        "doc_id", F.explode("coref").alias("c")).select("doc_id", "c.*"),
-    "natlog_tokens": NLG.add_natlog(docs).select(
-        "doc_id", F.explode("natlog").alias("t")).select("doc_id", "t.*"),
-    "srl_tokens": srl_cols(docs),
+    "coref_chains": CRF.coref_rows(docs),
+    "natlog_tokens": NLG.natlog_rows(docs),
+    "srl_tokens": SRL.srl_token_rows(docs),
 }
 out = {}
 for name, df in PLANS.items():
