@@ -186,6 +186,15 @@ def hash32_expr(s: str, dialect: str) -> str:
     return f"(('0x' || substr(md5({s}), 1, 8))::BIGINT)"
 
 
+def let_expr(bindings: dict[str, str], body: str, var: str) -> str:
+    """Spark let-binding: evaluate each binding once per row and expose
+    them to `body` as fields of the struct `var`, so a higher-order
+    function's free variables are not re-evaluated per lambda call."""
+    binding = ", ".join(f"'{k}', {v}" for k, v in bindings.items())
+    return (f"try_element_at(transform(array(named_struct({binding})), "
+            f"{var} -> {body}), 1)")
+
+
 # ------------------------------------------------------------ Python twins
 # Exact Python equivalents of the SQL CASE expressions above, used by the
 # Arrow pandas-UDF full parser and dictionary compiler. Parity with the

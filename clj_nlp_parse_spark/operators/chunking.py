@@ -15,19 +15,21 @@ documented simplification; sentence-bounded chunking would add the
 sentence index (from the sentence splitter's cumulative token counts) to
 the run key.
 
-Scale shape: explode tokens with position → lag() per doc marks run starts
-→ window cumsum assigns run ids → one hash agg per (doc, run) → filter on
-head presence. Two window/agg shuffles on the doc key, no per-row quadratic
-scan, identical formulation in both dialects.
+Scale shape: one declared Arrow batch stage per doc batch
+(`chunk_rows`); `chunk_runs` finds every kept run of a doc in one linear
+pass, and the tree, dependency and srl kernels (trees.py, srl.py) read
+their chunks from the same function. `chunks_sql` is the DuckDB oracle's
+relational rendering (explode → lag run starts → cumsum run ids → per-run
+agg).
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.dialect import _q
 from clj_nlp_parse_spark.functions.text import map_text_rows
 
 # PRP is an NP constituent and head (a pronoun IS a noun phrase — the
@@ -37,61 +39,6 @@ NP_TAGS = ("DT", "PRP", "PRP$", "CD", "JJ", "JJR", "JJS",
 NP_HEAD_TAGS = ("PRP", "NN", "NNS", "NNP", "NNPS")
 VP_TAGS = ("MD", "RB", "VB", "VBD", "VBG", "VBN", "VBP", "VBZ")
 VP_HEAD_TAGS = ("VB", "VBD", "VBG", "VBN", "VBP", "VBZ")
-
-
-from clj_nlp_parse_spark.dialect import _q
-
-
-def chunks(df: DataFrame, tags: tuple[str, ...] = NP_TAGS,
-           head_tags: tuple[str, ...] = NP_HEAD_TAGS,
-           label: str = "NP",
-           id_col: str = "doc_id",
-           text_col: str = "text") -> DataFrame:
-    """Maximal-run chunks over the deterministic tagger's output.
-
-    Output: (id, label, chunk_index [0-based per doc], tok_beg, tok_end
-    [token range, end exclusive], head [last head-tagged word], text
-    [space-joined words])."""
-    in_set = ", ".join(_q(t) for t in tags)
-    head_set = ", ".join(_q(t) for t in head_tags)
-    words = F.expr(dialect.tokens_expr(text_col, "spark"))
-    pos_case = dialect.pos_case_expr("t", "spark")
-    tok = (df.select(F.col(id_col), words.alias("words"))
-           .select(id_col,
-                   F.posexplode(F.expr(
-                       f"transform(words, t -> named_struct("
-                       f"'w', t, 'tag', ({pos_case})))"))
-                   .alias("pos", "x"))
-           .select(id_col, "pos",
-                   F.col("x.w").alias("w"), F.col("x.tag").alias("tag"))
-           .where(F.expr(f"tag IN ({in_set})")))
-    w_ord = Window.partitionBy(id_col).orderBy("pos")
-    runs = tok.withColumn(
-        "start", F.when(
-            F.lag("pos").over(w_ord).isNull()
-            | (F.lag("pos").over(w_ord) != F.col("pos") - 1), 1)
-        .otherwise(0)
-    ).withColumn("run_id", F.sum("start").over(
-        w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    agg = (runs.groupBy(id_col, "run_id")
-           .agg(F.min("pos").alias("tok_beg"),
-                (F.max("pos") + 1).alias("tok_end"),
-                F.max(F.when(F.expr(f"tag IN ({head_set})"),
-                             F.col("pos"))).alias("head_pos"),
-                F.array_join(F.array_sort(F.collect_list(
-                    F.struct("pos", "w"))).getField("w"), " ").alias("text"),
-                F.max(F.when(F.expr(f"tag IN ({head_set})"),
-                             F.struct("pos", F.col("w").alias("hw"))))
-                .getField("hw").alias("head"))
-           .where(F.col("head_pos").isNotNull()))
-    w_idx = Window.partitionBy(id_col).orderBy("tok_beg")
-    return (agg.select(
-        F.col(id_col),
-        F.lit(label).alias("label"),
-        (F.row_number().over(w_idx) - 1).cast("long").alias("chunk_index"),
-        F.col("tok_beg").cast("long"),
-        F.col("tok_end").cast("long"),
-        "head", "text"))
 
 
 def chunks_sql(tags: tuple[str, ...], head_tags: tuple[str, ...],
@@ -135,55 +82,57 @@ def chunks_sql(tags: tuple[str, ...], head_tags: tuple[str, ...],
     FROM agg"""
 
 
-_CHUNK_SPECS = (("NP", frozenset(NP_TAGS), frozenset(NP_HEAD_TAGS)),
-                ("VP", frozenset(VP_TAGS), frozenset(VP_HEAD_TAGS)))
+# NP_TAGS and VP_TAGS are disjoint, so a maximal run of one label's tags
+# is exactly a maximal run of same-class tokens
+_CLASS = {**dict.fromkeys(NP_TAGS, "NP"), **dict.fromkeys(VP_TAGS, "VP")}
+_HEADS = {"NP": frozenset(NP_HEAD_TAGS), "VP": frozenset(VP_HEAD_TAGS)}
+
+
+def chunk_runs(tags: list[str]) -> list[tuple[str, int, int, int]]:
+    """The kept chunk runs of one doc's tag list as (label, beg, fin,
+    head): beg 0-based, fin exclusive, head the 0-based position of the
+    run's LAST head-tagged token. Runs with no head tag are dropped. One
+    pass over the tags; the runs come out sorted by beg and disjoint."""
+    runs = []
+    n = len(tags)
+    i = 0
+    while i < n:
+        label = _CLASS.get(tags[i])
+        if label is None:
+            i += 1
+            continue
+        heads = _HEADS[label]
+        j, head = i, -1
+        while j < n and _CLASS.get(tags[j]) == label:
+            if tags[j] in heads:
+                head = j
+            j += 1
+        if head >= 0:
+            runs.append((label, i, j, head))
+        i = j
+    return runs
 
 
 def _chunk_rows(text: str | None) -> list[tuple]:
     ws, tags = dialect.tagged_words_py(text)
-    n = len(ws)
+    count = {"NP": 0, "VP": 0}
     out = []
-    for label, in_set, head_set in _CHUNK_SPECS:
-        ci = 0
-        i = 0
-        while i < n:
-            if tags[i] not in in_set:
-                i += 1
-                continue
-            j = i
-            head = None
-            while j < n and tags[j] in in_set:
-                if tags[j] in head_set:
-                    head = ws[j]
-                j += 1
-            if head is not None:
-                out.append((label, ci, i, j, head, " ".join(ws[i:j])))
-                ci += 1
-            i = j
+    for label, beg, fin, head in chunk_runs(tags):
+        out.append((label, count[label], beg, fin, ws[head],
+                    " ".join(ws[beg:fin])))
+        count[label] += 1
     return out
 
 
 def chunk_rows(df: DataFrame, id_col: str = "doc_id",
                text_col: str = "text") -> DataFrame:
     """NP and VP chunk rows (id_col, label, chunk_index, tok_beg,
-    tok_end, head, text) in ONE declared Arrow batch stage (r6
-    optimization, guide §4: the fused-parser precedent) — the relational
-    form paid two explode→window→window→agg pipelines (one per label);
-    the kernel applies the identical maximal-run + head-election contract
-    per doc. All values are ints/strings, oracle-gated at both SFs."""
+    tok_end, head, text) in ONE declared Arrow batch stage: `chunk_runs`
+    per doc, chunk_index dense per (doc, label). All values are
+    ints/strings, oracle-gated at both SFs."""
     return map_text_rows(
         df, _chunk_rows,
         [("label", pa.string()), ("chunk_index", pa.int64()),
          ("tok_beg", pa.int64()), ("tok_end", pa.int64()),
          ("head", pa.string()), ("text", pa.string())],
         id_col, text_col)
-
-
-def np_chunks(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    return chunks(df, NP_TAGS, NP_HEAD_TAGS, "NP", id_col, text_col)
-
-
-def vp_chunks(df: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    return chunks(df, VP_TAGS, VP_HEAD_TAGS, "VP", id_col, text_col)

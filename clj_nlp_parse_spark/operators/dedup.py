@@ -772,7 +772,7 @@ def decontaminate(train: DataFrame, eval_df: DataFrame, n: int = 5,
 # ------------------------------------------------------------ Python twins
 # INDEPENDENT pure-Python implementations of the signature chain (hashlib
 # md5 + re — no SQL rendering in either dialect), the third comparator for
-# the dedup surface per the trees.tree_ser_py / dialect.pos_py pattern:
+# the dedup surface per the dialect.pos_py pattern:
 # the Spark operators and the DuckDB oracles both render from the *_sql
 # builders above, so agreement between them proves cross-engine execution
 # parity but not independent specification; agreement with THESE functions
@@ -781,15 +781,9 @@ def decontaminate(train: DataFrame, eval_df: DataFrame, n: int = 5,
 import hashlib as _hashlib
 import re as _re
 
-_TOKEN_RE_PY = None
-
-
 def _tokens_py(text: str | None) -> list[str]:
     """Twin of dialect.tokens_expr: lowercase word tokens, NULL ≡ empty."""
-    global _TOKEN_RE_PY
-    if _TOKEN_RE_PY is None:
-        _TOKEN_RE_PY = _re.compile(dialect.TOKEN_RE)
-    return _TOKEN_RE_PY.findall((text or "").lower())
+    return dialect.TOKEN_RE_PY.findall((text or "").lower())
 
 
 def h31_py(s: str) -> int:

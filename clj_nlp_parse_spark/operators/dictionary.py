@@ -402,11 +402,8 @@ def tag_mentions(df: DataFrame, items: list[DictItem],
         cased="z.cs" if "cs" in cols else None,
         clemmas="z.cl" if "cl" in cols else None,
         with_features=with_features)
-    binding = ", ".join(f"'{k}', {v}" for k, v in cols.items())
-    let_expr = (f"try_element_at(transform("
-                f"array(named_struct({binding})), "
-                f"z -> {body}), 1)")
-    return ann.withColumn("tok_re_mentions", F.expr(let_expr))
+    return ann.withColumn("tok_re_mentions",
+                          F.expr(dialect.let_expr(cols, body, "z")))
 
 
 def mentions_feature_cols(mentions: str, toks: str,

@@ -1,20 +1,27 @@
 """Per-document feature vectors — the reference's feature operators in
-pure Catalyst column expressions (no Python in the hot path).
+Catalyst column expressions, except F2, whose tree serialization runs in
+a per-doc Python kernel.
 
 Implements (SURVEY.md §2.5):
   F1  pos_tag_features   (reference feature/lang.clj:77-111, metas :113-119)
   F4  sentiment_features (reference feature/lang.clj:165-179)
   F14 token_features     (doc-level stats, reference README.md:269-291)
-  F2  tree_features / hash-id features via dialect.hash32_expr
+  F2  tree_features (hash of trees.tree_ser, the dialect.hash32_expr
+      formula, in a declared Arrow batch stage)
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import schema
 from clj_nlp_parse_spark.functions import text as tx
+from clj_nlp_parse_spark.functions.text import map_text_rows
+from clj_nlp_parse_spark.operators import trees as TR
 
 
 def _type_count(toks: str, type_name: str) -> Column:
@@ -223,23 +230,24 @@ def sentiment_features(df: DataFrame, id_col: str = "doc_id",
         df.select(id_col, text_col), text_col).drop(text_col)
 
 
+def _tree_id_rows(text: str | None) -> list[tuple[int]]:
+    # dialect.hash32_expr in Python: first 8 md5 hex chars → int
+    ser = TR.tree_ser(text)
+    return [(int(hashlib.md5(ser.encode("utf-8")).hexdigest()[:8], 16),)]
+
+
 def tree_features(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """F2-shaped: dep_tree_id = deterministic hash of the CANONICAL BRACKET
-    SERIALIZATION of the engine's actual tree column (trees.py) — the
+    SERIALIZATION of the engine's actual tree (trees.tree_ser) — the
     replacement for the reference's summed JVM .hashCode of trees
     (feature/lang.clj:123-137), rehomed per VERDICT r02 #7 so the feature
-    id is derived from the same structure a tree consumer traverses.
-    Utterance-level (the chunk grammar's documented sentence-boundary
-    simplification, chunking.py)."""
-    from clj_nlp_parse_spark import dialect as dlect
-    from clj_nlp_parse_spark.operators import trees as TR
-    words = dlect.tokens_expr(text_col, "spark")
-    ser = TR.tree_expr(words, "ser")
-    h = dlect.hash32_expr("z.ser", "spark")
-    let = (f"try_element_at(transform(array(named_struct('ser', {ser})), "
-           f"z -> cast(({h}) as bigint)), 1)")
-    return df.select(F.col(id_col), F.expr(let).alias("dep_tree_id"))
+    id is derived from the same structure a tree consumer traverses. One
+    row per doc from a declared Arrow batch stage. Utterance-level (the
+    chunk grammar's documented sentence-boundary simplification,
+    chunking.py)."""
+    return map_text_rows(df, _tree_id_rows, [("dep_tree_id", pa.int64())],
+                         id_col, text_col)
 
 
 # ------------------------------------------------------------ Python twin

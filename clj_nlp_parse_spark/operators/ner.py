@@ -170,7 +170,7 @@ def tag_model_mentions(df: DataFrame, text_col: str = "text") -> DataFrame:
 # ------------------------------------------------------------ Python twin
 # INDEPENDENT pure-Python A6 mentions (dict lookup + one linear scan, no
 # SQL, none of the aligned break/ends array machinery) — the third
-# comparator per the trees.tree_ser_py pattern; fuzz-asserted in
+# comparator per the dialect.pos_py pattern; fuzz-asserted in
 # tests/test_fuzz_parity.py alongside the hand-derived goldens.
 
 def model_mentions_py(words: list[str]) -> list[tuple]:

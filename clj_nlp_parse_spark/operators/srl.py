@@ -172,7 +172,7 @@ _VERB_TAGS = frozenset(schema.VERB_TAGS)
 def _srl_rows(text: str | None) -> list[tuple]:
     ws, tags = dialect.tagged_words_py(text)
     rows = []
-    for hd, dep, lab in TR._dep_edges_linear(ws, tags, TR._chunks_py(tags)):
+    for hd, dep, lab in TR.dep_edges(tags):
         w = ws[dep - 1]
         pb = dialect.lemma_py(w) + ".01" if tags[dep - 1] in _VERB_TAGS \
             else None
@@ -184,7 +184,7 @@ def srl_token_rows(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """One row per token (id_col, id, word, head_id, dependency_label,
     function_tag, propbank) — the flattened A13 surface, as a declared
-    Arrow batch stage: dep edges from the linearized chunk derivation,
+    Arrow batch stage: dep edges from trees.dep_edges,
     function tag from the fixed label→tag table (NULL for the root),
     propbank = lemma + '.01' for verb-tagged tokens."""
     return map_text_rows(

@@ -152,7 +152,7 @@ def q_sentiment_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from clj_nlp_parse_spark.operators import trees as TR
 
-_TREE_SER_DUCK = TR.serialize_sql("words", "tg", "ch", "duck")
+_TREE_SER_DUCK = TR.serialize_sql("words", "tg", "ch")
 
 
 @register(
@@ -168,8 +168,9 @@ def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 tree-features — deterministic hash-id replacement (reference
     feature/lang.clj:123-137's summed JVM .hashCode of trees), REHOMED
     (VERDICT r02 #7) onto the canonical bracket serialization of the
-    engine's actual tree column (trees.py) so the feature id and the
-    traversable tree can never drift apart."""
+    engine's actual tree (trees.tree_ser) so the feature id and the
+    traversable tree can never drift apart. One declared Arrow batch
+    stage (the per-doc serializer and hash)."""
     return features.tree_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
 
 
@@ -181,7 +182,7 @@ def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(e.child AS BIGINT) AS child, e.label AS label,
            CAST(e.token_index AS BIGINT) AS token_index
     FROM (SELECT doc_id,
-            unnest({TR.edges_sql('words', 'tg', 'ch', 'duck')}) AS e
+            unnest({TR.edges_sql('words', 'tg', 'ch')}) AS e
           FROM tr4)
     ORDER BY doc_id, child""",
 )
@@ -190,9 +191,9 @@ def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     array per SURVEY §1.4 — ROOT → S → NP/VP chunk nodes (with the
     reference golden's VP(V, NP) object attachment) → preterminals →
     leaves, 1-based token_index like the reference's :token-index
-    (sr_parse_test.clj:26-49). Exploded to one row per edge; pure per-row
-    array computation, zero shuffle."""
-    # r6: exploded edge surface via the declared Arrow kernel
+    (sr_parse_test.clj:26-49). One row per edge from the declared Arrow
+    kernel parse_tree_edge_rows (behind spread_small_input); the only
+    shuffle is the final presentation sort."""
     return TR.parse_tree_edge_rows(_docs(spark, sf_dir)) \
              .repartition(1).sortWithinPartitions("doc_id", "child")
 
@@ -200,12 +201,12 @@ def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dep_tree_edges",
     _duck_toks_cte() + ", " + TR.duck_tree_cte("tk")
-    + f""", tr5 AS (SELECT *, {TR.root_index_sql('tg', 'duck')} AS rt
+    + f""", tr5 AS (SELECT *, {TR.root_index_sql('tg')} AS rt
                     FROM tr4)
     SELECT doc_id, CAST(e.head AS BIGINT) AS head,
            CAST(e.dependent AS BIGINT) AS dependent, e.label AS label
     FROM (SELECT doc_id,
-            unnest({TR.dep_edges_sql('words', 'tg', 'ch', 'duck')}) AS e
+            unnest({TR.dep_edges_sql('words', 'tg', 'ch')}) AS e
           FROM tr5)
     ORDER BY doc_id, dependent""",
 )
@@ -214,8 +215,9 @@ def q_dep_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     stanford.clj:395-405; root election = reference root-dependency
     parse.clj:167-171): head 0 → root token, chunk members → chunk head
     ('mod'), everything else → root ('dep'). 1-based token indices; one
-    row per token. Pure per-row computation, zero shuffle."""
-    # r6: exploded edge surface via the declared Arrow kernel
+    row per token from the declared Arrow kernel dep_edge_rows (behind
+    spread_small_input); the only shuffle is the final presentation
+    sort."""
     return TR.dep_edge_rows(_docs(spark, sf_dir)) \
              .repartition(1).sortWithinPartitions("doc_id", "dependent")
 
@@ -2238,11 +2240,12 @@ def q_np_vp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8-surface deterministic shallow chunking: maximal NP and VP spans
     over the rule tagger's output, with head election — the span-extraction
     capability the reference gets from constituency trees
-    (stanford.clj:381-405), re-expressed as a relational runs computation
-    (explode → lag run starts → cumsum run ids → per-run agg)."""
+    (stanford.clj:381-405). Both labels come from one declared Arrow
+    kernel pass (chunking.chunk_rows); the oracle states the same runs
+    relationally (explode → lag run starts → cumsum run ids → per-run
+    agg)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
-    # r6: both labels in one declared Arrow kernel pass
     return (CH.chunk_rows(docs)
             .repartition(1).sortWithinPartitions(
                 "doc_id", "label", "chunk_index"))
@@ -2928,19 +2931,18 @@ def q_mention_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lemmas/entity-types once from the bound words, and emit all three
     # mention sources inside a single two-level let (outer binds ws so
     # the inner bindings read it as a variable, not re-evaluate it).
-    from clj_nlp_parse_spark.operators.trees import _spark_let
     docs = _docs(spark, sf_dir)
     lemma_case = dialect.lemma_case_expr("t", "spark")
     body = (f"concat({D.mentions_sql(_COMPILED, 'z.ws', 'z.ls', 'spark')}, "
             f"{D.mentions_sql(_COMPILED2, 'z.ws', 'z.ls', 'spark')}, "
             f"{NER.ner_mentions_sql('z.ty', 'spark')})")
-    inner = _spark_let(
+    inner = dialect.let_expr(
         {"ws": "w0.ws",
          "ls": f"transform(w0.ws, t -> ({lemma_case}))",
          "ty": NER.token_types_sql("w0.ws", "spark")},
         body, "z")
-    fused = _spark_let({"ws": dialect.tokens_expr("text", "spark")},
-                       inner, "w0")
+    fused = dialect.let_expr({"ws": dialect.tokens_expr("text", "spark")},
+                             inner, "w0")
     return (docs.select("doc_id", F.explode(F.expr(fused)).alias("x"))
             .select("doc_id", F.col("x.label").alias("label"),
                     F.col("x.item_id").alias("item_id"),
@@ -3271,9 +3273,9 @@ from clj_nlp_parse_spark.operators import trees as TR2
     tk AS (SELECT doc_id, text, words, """
     + tx.annotated_tokens_sql("words", "duck") + """ AS toks FROM w),
     """ + TR2.duck_tree_cte("tk") + f""",
-    tr5 AS (SELECT *, {TR2.root_index_sql('tg', 'duck')} AS rt FROM tr4),
+    tr5 AS (SELECT *, {TR2.root_index_sql('tg')} AS rt FROM tr4),
     ed AS (SELECT doc_id, words, tg,
-             unnest({TR2.dep_edges_sql('words', 'tg', 'ch', 'duck')}) AS e
+             unnest({TR2.dep_edges_sql('words', 'tg', 'ch')}) AS e
            FROM tr5)
     SELECT doc_id, CAST(e.dependent AS BIGINT) AS id,
            words[e.dependent] AS word,

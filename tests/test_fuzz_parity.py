@@ -9,9 +9,14 @@ import random
 import string
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark import dialect
+from clj_nlp_parse_spark.operators import chunking as CH
+from clj_nlp_parse_spark.operators import features as FT
+from clj_nlp_parse_spark.operators import srl as SRL
+from clj_nlp_parse_spark.operators import trees as TR
 
 
 def _random_tokens(n: int, seed: int = 123) -> list[str]:
@@ -344,12 +349,41 @@ def test_trees_and_ner_fuzz_two_way(spark):
                         .tolist()), (name, c)
 
 
+def _duck_trees(docs: list[tuple]) -> dict:
+    """The DuckDB oracle's trees per doc_id — (edges, serialization, hash,
+    dep edges) from trees.duck_tree_cte and the DuckDB builders, a
+    relational statement of the grammar that shares no code with the
+    Python kernels."""
+    import pandas as pd
+    from clj_nlp_parse_spark import queries as Q
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        [(i, t, "en") for i, t in docs], columns=["doc_id", "text", "lang"]))
+    ser = TR.serialize_sql("words", "tg", "ch")
+    rows = con.execute(
+        f"""{Q._duck_toks_cte()}, {TR.duck_tree_cte("tk")},
+        tr5 AS (SELECT *, {TR.root_index_sql("tg")} AS rt FROM tr4)
+        SELECT doc_id, {TR.edges_sql("words", "tg", "ch")}, {ser},
+               {dialect.hash32_expr(ser, "duck")},
+               {TR.dep_edges_sql("words", "tg", "ch")}
+        FROM tr5""").fetchall()
+    return {d: (sorted((e["parent"], e["child"], e["label"], e["token_index"])
+                       for e in edges), s, h,
+                sorted((e["head"], e["dependent"], e["label"]) for e in dep))
+            for d, edges, s, h, dep in rows}
+
+
+def _dense_chunk_doc(n_tokens: int) -> str:
+    # every other token opens a single-token NP chunk: 'cat and cat and …'
+    return " ".join("cat" if i % 2 == 0 else "and" for i in range(n_tokens))
+
+
 def test_tree_python_twin_three_way(spark):
-    """tree_ser_py / dep_edges_py are INDEPENDENT Python implementations of
-    the tree grammar — the Spark rendering must agree with them on random
-    docs, giving tree parity a third comparator beyond the dialect-paired
-    SQL (same pattern as dialect.pos_py/lemma_py)."""
-    from clj_nlp_parse_spark.operators import trees as TR
+    """The production tree kernels — parse_tree_edge_rows, dep_edge_rows
+    and tree_features (trees.tree_ser and its md5 hash) — must agree with
+    the DuckDB oracle's independent statement of the grammar on random
+    docs and the degenerate chunk shapes."""
 
     rnd = random.Random(43)
     vocab = ["the", "a", "fast", "table", "runs", "is", "am", "running",
@@ -358,9 +392,8 @@ def test_tree_python_twin_three_way(spark):
     docs = [(i, " ".join(rnd.choice(vocab)
                          for _ in range(rnd.randint(0, 15))))
             for i in range(150)]
-    # r5 degenerate shapes for the aligned chunk-index arrays: every
-    # other token opens a chunk; adjacent NP/VP runs with no gap; chunk
-    # at position 0 and chunk ending exactly at n
+    # degenerate shapes: every other token opens a chunk; adjacent NP/VP
+    # runs with no gap; chunk at position 0 and chunk ending exactly at n
     docs += [
         (1001, " ".join("table" if i % 2 == 0 else "and"
                         for i in range(400))),
@@ -368,19 +401,61 @@ def test_tree_python_twin_three_way(spark):
         (1003, "table and table"), (1004, "and table and"),
     ]
     sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = TR.with_tree(sdf).select("doc_id", "tree_ser", "dep_edges") \
-        .collect()
-    import re as _re
-    n_nonempty = 0
-    for r in rows:
-        text = dict(docs)[r.doc_id]
-        words = _re.findall(dialect.TOKEN_RE, (text or "").lower())
-        assert r.tree_ser == TR.tree_ser_py(words), (r.doc_id, words)
-        got_dep = sorted((e.head, e.dependent, e.label)
-                         for e in r.dep_edges)
-        assert got_dep == sorted(TR.dep_edges_py(words)), (r.doc_id, words)
-        n_nonempty += bool(words)
-    assert n_nonempty > 100
+    edges: dict = {i: [] for i, _ in docs}
+    for r in TR.parse_tree_edge_rows(sdf).collect():
+        edges[r.doc_id].append((r.parent, r.child, r.label, r.token_index))
+    dep: dict = {i: [] for i, _ in docs}
+    for r in TR.dep_edge_rows(sdf).collect():
+        dep[r.doc_id].append((r.head, r.dependent, r.label))
+    ids = {r.doc_id: r.dep_tree_id for r in FT.tree_features(sdf).collect()}
+    want = _duck_trees(docs)
+    assert len(want) == len(ids) == len(docs)
+    for i, text in docs:
+        w_edges, w_ser, w_hash, w_dep = want[i]
+        assert sorted(edges[i]) == w_edges, (i, text)
+        assert TR.tree_ser(text) == w_ser, (i, text)
+        assert ids[i] == w_hash, (i, text)
+        assert sorted(dep[i]) == w_dep, (i, text)
+    assert sum(len(d) > 1 for d in dep.values()) > 100  # non-vacuous
+
+
+# the row function behind each kernel
+_KERNELS = {
+    "chunk_rows": CH._chunk_rows,
+    "parse_tree_edge_rows": TR._parse_tree_rows,
+    "dep_edge_rows": TR._dep_rows,
+    "srl_token_rows": SRL._srl_rows,
+    "tree_features": FT._tree_id_rows,
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_KERNELS))
+def test_tree_kernels_linear_on_dense_chunks(kernel):
+    """Linearity pin for the per-doc kernels that read chunk runs: on a
+    20,000-token doc where every other token opens a chunk, a kernel that
+    scans all runs per run (quadratic in the chunk count) takes several
+    seconds; a linear one takes a few milliseconds. No Spark session."""
+    import time
+    rows = _KERNELS[kernel]
+    doc = _dense_chunk_doc(20_000)
+    rows(doc[:100])  # warm the tagger cache
+    t0 = time.perf_counter()
+    out = rows(doc)
+    took = time.perf_counter() - t0
+    assert out, kernel
+    assert took < 2.0, (kernel, took)
+
+
+def test_tree_kernels_match_duckdb_on_dense_chunks():
+    """The dense-chunk doc of the linearity pin, at 2,000 tokens: the tree
+    kernels' row functions equal the DuckDB oracle. No Spark session."""
+    doc = _dense_chunk_doc(2_000)
+    w_edges, w_ser, w_hash, w_dep = _duck_trees([(1, doc)])[1]
+    assert sorted(TR._parse_tree_rows(doc)) == w_edges
+    assert TR.tree_ser(doc) == w_ser
+    assert FT._tree_id_rows(doc) == [(w_hash,)]
+    assert sorted(TR._dep_rows(doc)) == w_dep
+    assert len(w_dep) == 2_000
 
 
 def test_signature_python_twin_three_way(spark):
@@ -389,7 +464,7 @@ def test_signature_python_twin_three_way(spark):
     the Spark operators must agree bit-exactly on random docs (plus the
     empty/NULL/punct/short-doc pathologies), giving the dedup surface a
     third comparator beyond the dialect-paired SQL (same pattern as
-    trees.tree_ser_py)."""
+    dialect.pos_py)."""
     from clj_nlp_parse_spark.operators import dedup as D
 
     rnd = random.Random(47)

@@ -301,13 +301,15 @@ def test_model_mentions_pure_projection(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
-def test_tree_queries_pure_projection(spark, sf_dir):
+def test_tree_queries_arrow_kernel_no_join_no_hash_exchange(spark, sf_dir):
+    # the tree surfaces run their per-doc Arrow kernel and nothing
+    # relational beyond the final presentation sort
     from clj_nlp_parse_spark import queries as Q
-    for name in ("parse_tree_edges", "dep_tree_edges"):
+    for name in ("parse_tree_edges", "dep_tree_edges", "tree_features"):
         plan = _plan(Q.QUERIES[name](spark, sf_dir))
+        assert "MapInArrow" in plan, name
         assert "Join" not in plan, name
         assert "Exchange hashpartitioning" not in plan, name
-        assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, name
 
 
 def test_cm_point_estimates_broadcasts_sketch(spark):

@@ -96,7 +96,7 @@ def test_srl_struct_shape_golden(spark):
     assert rows[1].propbank is None          # scan tags NN here
     # parity with the oracle-checked dep tree: same head per token
     from clj_nlp_parse_spark.operators import trees as TR
-    dep = {r.dependent: r.head for r in TR.dep_tree_edges(df).collect()}
+    dep = {r.dependent: r.head for r in TR.dep_edge_rows(df).collect()}
     assert {i: t.head_id for i, t in rows.items()} == dep
 
 

@@ -1,11 +1,8 @@
-"""A8/A9 tree-structured column: sr_parse_test.clj-shaped golden (nested
-tree equality on a small utterance), canonical serialization goldens, and
-consistency between the edge array, the serialization, and the rehomed F2
-hash."""
+"""A8/A9 tree surface: sr_parse_test.clj-shaped golden (nested tree
+equality on a small utterance) over the edge kernel, canonical
+serialization goldens over the serializer, and the rehomed F2 hash."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from clj_nlp_parse_spark.operators import trees as TR
 
@@ -13,7 +10,7 @@ from clj_nlp_parse_spark.operators import trees as TR
 def _edges(spark, text):
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     return [(r.parent, r.child, r.label, r.token_index)
-            for r in TR.parse_tree_edges(df).orderBy("child").collect()]
+            for r in TR.parse_tree_edge_rows(df).orderBy("child").collect()]
 
 
 def _nested(edges):
@@ -63,38 +60,29 @@ def test_sr_parse_shaped_golden(spark):
     assert _nested(_edges(spark, "i am paul")) == FIRST_SENT_GOLD
 
 
-def test_serialization_goldens(spark):
-    df = spark.createDataFrame(
-        [(1, "i am paul"), (2, "the fast table runs quickly"), (3, "")],
-        "doc_id long, text string")
-    got = {r.doc_id: r.tree_ser
-           for r in TR.with_tree(df).select("doc_id", "tree_ser").collect()}
-    assert got[1] == "(ROOT (S (NP (PRP i)) (VP (VBP am) (NP (NN paul)))))"
+def test_serialization_goldens():
+    assert TR.tree_ser("i am paul") == (
+        "(ROOT (S (NP (PRP i)) (VP (VBP am) (NP (NN paul)))))")
     # NP run over DT JJ JJ NNS; 'quickly' (RB) has no verb head → loose
-    assert got[2] == ("(ROOT (S (NP (DT the) (JJ fast) (JJ table) "
-                      "(NNS runs)) (RB quickly)))")
-    assert got[3] == "(ROOT (S))"
+    assert TR.tree_ser("the fast table runs quickly") == (
+        "(ROOT (S (NP (DT the) (JJ fast) (JJ table) "
+        "(NNS runs)) (RB quickly)))")
+    assert TR.tree_ser("") == "(ROOT (S))"
 
 
-def test_vp_close_deferred_only_for_attached_np(spark):
-    got = {r.doc_id: r.tree_ser for r in TR.with_tree(
-        spark.createDataFrame(
-            [(1, "is quickly paul"),       # adjacent NP attaches into VP
-             (2, "is quickly the table")], # [the(DT) table(JJ)] is HEADLESS
-            "doc_id long, text string")    # → dissolves to loose tokens
-    ).select("doc_id", "tree_ser").collect()}
-    assert got[1] == "(ROOT (S (VP (VBZ is) (RB quickly) (NP (NN paul)))))"
-    assert got[2] == ("(ROOT (S (VP (VBZ is) (RB quickly)) "
-                      "(DT the) (JJ table)))")
+def test_vp_close_deferred_only_for_attached_np():
+    # adjacent NP attaches into VP
+    assert TR.tree_ser("is quickly paul") == (
+        "(ROOT (S (VP (VBZ is) (RB quickly) (NP (NN paul)))))")
+    # [the(DT) table(JJ)] is HEADLESS → dissolves to loose tokens
+    assert TR.tree_ser("is quickly the table") == (
+        "(ROOT (S (VP (VBZ is) (RB quickly)) (DT the) (JJ table)))")
 
 
-def test_headless_runs_dissolve_to_loose_tokens(spark):
+def test_headless_runs_dissolve_to_loose_tokens():
     # 'quickly slowly' is a VP-class run with no VB* head → tokens loose
-    got = {r.doc_id: r.tree_ser for r in TR.with_tree(
-        spark.createDataFrame(
-            [(1, "quickly slowly")], "doc_id long, text string")
-    ).select("doc_id", "tree_ser").collect()}
-    assert got[1] == "(ROOT (S (RB quickly) (RB slowly)))"
+    assert TR.tree_ser("quickly slowly") == (
+        "(ROOT (S (RB quickly) (RB slowly)))")
 
 
 def test_tree_features_hashes_the_serialization(spark):
@@ -102,7 +90,7 @@ def test_tree_features_hashes_the_serialization(spark):
     from clj_nlp_parse_spark.operators import features as FT
     df = spark.createDataFrame([(1, "i am paul")], "doc_id long, text string")
     (row,) = FT.tree_features(df).collect()
-    ser = TR.with_tree(df).select("tree_ser").collect()[0].tree_ser
+    ser = TR.tree_ser("i am paul")
     (want,) = spark.sql(
         "SELECT " + dialect.hash32_expr(f"'{ser}'", "spark")).collect()
     assert row.dep_tree_id == want[0]
@@ -112,14 +100,14 @@ def test_dep_tree_golden(spark):
     # 'i am paul': root = first verb ('am', index 2); 'i' and 'paul' are
     # single-member chunks (each its own head) → both depend on root
     got = {r.dependent: (r.head, r.label)
-           for r in TR.dep_tree_edges(
+           for r in TR.dep_edge_rows(
                spark.createDataFrame([(1, "i am paul")],
                                      "doc_id long, text string")).collect()}
     assert got == {2: (0, "root"), 1: (2, "dep"), 3: (2, "dep")}
     # multi-member NP: members point at the chunk head (last head tag),
     # which points at the root; no verb → root = token 1
     got = {r.dependent: (r.head, r.label)
-           for r in TR.dep_tree_edges(
+           for r in TR.dep_edge_rows(
                spark.createDataFrame([(1, "the fast table runs quickly")],
                                      "doc_id long, text string")).collect()}
     # tags: DT JJ JJ NNS RB → NP run [1..4] head = 'runs' (NNS, last);
@@ -138,49 +126,12 @@ def test_dep_tree_golden(spark):
 
 
 def test_dep_tree_zero_token_doc_no_crash(spark):
-    # review r03: rootix evaluated during binding construction — an
-    # empty/punct-only doc must yield zero dep edges, not
-    # INVALID_INDEX_OF_ZERO (sequence(1, 0) is descending in Spark)
+    # an empty/punct-only/NULL doc yields zero dep edges and the empty
+    # tree, not a crash
     df = spark.createDataFrame(
         [(1, ""), (2, "..."), (3, None), (4, "i am paul")],
         "doc_id long, text string")
-    got = TR.dep_tree_edges(df).groupBy("doc_id").count().collect()
+    got = TR.dep_edge_rows(df).groupBy("doc_id").count().collect()
     assert {r.doc_id: r["count"] for r in got} == {4: 3}
-    allc = TR.with_tree(df).select("doc_id", "tree_ser", "dep_edges") \
-        .collect()
-    by_id = {r.doc_id: r for r in allc}
-    assert by_id[1].tree_ser == "(ROOT (S))" and by_id[1].dep_edges == []
-
-
-def test_parse_tree_is_pure_projection(spark):
-    df = spark.createDataFrame([(1, "i am paul")], "doc_id long, text string")
-    plan = (TR.parse_tree_edges(df)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
-
-
-def test_chunk_pos_index_modes(spark):
-    # direct pin of the r5 token-aligned chunk-index arrays: adjacent
-    # chunks (no gap), chunk at position 0, chunk ending at n, single
-    # tokens between chunks, and the empty chunk array
-    from pyspark.sql import functions as F
-    from clj_nlp_parse_spark.operators.trees import _chunk_pos_index_sql
-
-    # tokens 1..8 (0-based positions 0..7); chunks: [0,2) [2,3) [5,7)
-    ch = ("array(named_struct('label','NP','beg',0,'fin',2),"
-          "named_struct('label','VP','beg',2,'fin',3),"
-          "named_struct('label','NP','beg',5,'fin',7))")
-    row = spark.sql(
-        f"SELECT {_chunk_pos_index_sql(ch, '8', 'member')} AS member, "
-        f"{_chunk_pos_index_sql(ch, '8', 'start')} AS start, "
-        f"{_chunk_pos_index_sql(ch, '8', 'end')} AS fin, "
-        f"""{_chunk_pos_index_sql(
-            "cast(array() as array<struct<label:string,beg:int,fin:int>>)",
-            '3', 'member')} AS empty"""
-    ).collect()[0]
-    # 1-based token i covers 0-based position i-1
-    assert row.member == [1, 1, 2, None, None, 3, 3, None]
-    assert row.start == [1, None, 2, None, None, 3, None, None]
-    assert row.fin == [None, 1, 2, None, None, None, 3, None]
-    assert row.empty == []
+    for text in ("", "...", None):
+        assert TR.tree_ser(text) == "(ROOT (S))"

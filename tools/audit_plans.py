@@ -21,14 +21,15 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 # queries whose PLANNED Arrow stages are by design (binary decode / fused
 # Python parser / cogrouped merge_asof escape hatch / r6 vectorized
-# cosine pair verification, similarity._cosine_arrow_fn)
+# cosine pair verification, similarity._cosine_arrow_fn / the per-doc
+# annotator kernels of functions.text.map_text_rows)
 ARROW_OK = {"image_feature_materialization", "asof_join_merge",
             "cosine_dedup_pairs", "cosine_dedup_banded",
             "cosine_dedup_banded_derived", "embedding_dedup_groups",
             "ivf_topk", "minhash_signatures", "lsh_pairs", "simhash",
             "natlog_tokens", "coref_chains", "srl_tokens",
             "dep_tree_edges", "parse_tree_edges", "np_vp_chunks",
-            "coref_features", "natlog_features"}
+            "coref_features", "natlog_features", "tree_features"}
 
 
 def main() -> None:
