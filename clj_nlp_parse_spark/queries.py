@@ -1,23 +1,14 @@
-"""Registry of (Spark query, DuckDB oracle SQL) pairs for the driver gate.
+"""Registry of (Spark query, DuckDB oracle SQL, presentation order) triples
+for the driver gate.
 
 Every operator from SURVEY.md §2 that is SQL-expressible lands here with
 BOTH a Spark callable (spark, sf_dir) -> DataFrame and a DuckDB oracle SQL
 string over the pre-registered views (region nation customer supplier part
 orders lineitem events documents embeddings). The two sides are generated
 from the same rule tables (dialect.py) so arithmetic is bit-identical.
-
-Presentation sort (r6 optimization, guide §2.4): every query's FINAL
-`.repartition(1).sortWithinPartitions(cols)` replaces the old global
-`.orderBy(cols)`. A global orderBy range-partitions its input, and range
-partitioning runs a SAMPLING pass that re-executes the ENTIRE child plan —
-measured ~2x wall on every map-heavy query here (cosine_dedup_banded
-18.5 -> 9.7 s, doc_stats 1.67 -> 0.96 s at sf0.1). The replacement shuffles
-the (oracle-sized) RESULT rows once into a single partition and sorts
-there: same rows, same total order, pipeline computed ONCE. Window-spec
-orderBys and the semantic top-k `orderBy().limit()` (TakeOrdered) are
-untouched. Production consumers of the unsorted operator outputs skip this
-presentation layer entirely, so the single result partition is a property
-of the oracle gate's tiny outputs, not of the operators at scale.
+Each registration declares the output columns its oracle's ORDER BY sorts
+on; `register` presents every query's result in that order, so a query
+body returns its unsorted operator output.
 """
 
 from __future__ import annotations
@@ -34,13 +25,37 @@ from clj_nlp_parse_spark.operators import features
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+ORDERS: dict[str, tuple[str, ...]] = {}
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str, *, order: tuple[str, ...]):
+    """Register the decorated body as query `name`, checked against the
+    DuckDB `oracle` and presented sorted on the output columns `order`
+    (the oracle's ORDER BY). The body is returned unchanged; `QUERIES`
+    holds the presented form.
+
+    Presentation sort: the result is presented as
+    `.repartition(1).sortWithinPartitions(*order)`, not a global
+    `.orderBy(*order)`. A global orderBy range-partitions its input, and
+    range partitioning runs a SAMPLING pass that re-executes the ENTIRE
+    child plan — measured ~2x wall on every map-heavy query here
+    (cosine_dedup_banded 18.5 -> 9.7 s, doc_stats 1.67 -> 0.96 s at
+    sf0.1). The single-partition sort shuffles the (oracle-sized) RESULT
+    rows once into one partition and sorts there: same rows, same total
+    order, pipeline computed ONCE. Window-spec orderBys and the semantic
+    top-k `orderBy().limit()` (TakeOrdered) inside bodies are untouched,
+    and production consumers of the operators never pass through here.
+    Open hazard: an unbounded (corpus-sized) output still funnels through
+    this one task; splitting bounded from unbounded outputs is an open
+    ROADMAP item.
+    """
     def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        def present(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return fn(spark, sf_dir).repartition(1).sortWithinPartitions(
+                *order)
+        QUERIES[name] = present
+        ORACLES[name] = oracle
+        ORDERS[name] = order
         return fn
     return deco
 
@@ -92,10 +107,10 @@ for _nm, _ix in (("pos_first_tag", 1), ("pos_last_tag", -1)):
     "pos_features",
     _duck_toks_cte() + " SELECT doc_id, " + ", ".join(_POS_ORACLE_COLS)
     + " FROM tk ORDER BY doc_id",
-)
+    order=("doc_id",))
 def q_pos_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 pos-tag-features (reference feature/lang.clj:77-111)."""
-    return features.pos_tag_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return features.pos_tag_features(_docs(spark, sf_dir))
 
 
 @register(
@@ -113,10 +128,10 @@ def q_pos_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS token_average_length,
       (rtrim(text) LIKE '%?') AS is_question
     FROM tk ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F14 doc-level stats (reference README.md:269-291)."""
-    return features.token_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return features.token_features(_docs(spark, sf_dir))
 
 
 _SENT_WORDS_DUCK = features.sentence_words_sql("text", "duck")
@@ -144,10 +159,10 @@ _SC = features.sentence_sentiment_sql("ws", "duck")
         (CAST(s AS DOUBLE) / n) * (CAST(s AS DOUBLE) / n) END
         AS sentiment_sentence_variance
     FROM ag ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_sentiment_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 sentiment-features (reference feature/lang.clj:165-179)."""
-    return features.sentiment_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return features.sentiment_features(_docs(spark, sf_dir))
 
 
 from clj_nlp_parse_spark.operators import trees as TR
@@ -163,7 +178,7 @@ _TREE_SER_DUCK = TR.serialize_sql("words", "tg", "ch")
       CAST({dialect.hash32_expr(_TREE_SER_DUCK, 'duck')} AS BIGINT)
         AS dep_tree_id
     FROM tr4 ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 tree-features — deterministic hash-id replacement (reference
     feature/lang.clj:123-137's summed JVM .hashCode of trees), REHOMED
@@ -171,7 +186,7 @@ def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's actual tree (trees.tree_ser) so the feature id and the
     traversable tree can never drift apart. One declared Arrow batch
     stage (the per-doc serializer and hash)."""
-    return features.tree_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return features.tree_features(_docs(spark, sf_dir))
 
 
 @register(
@@ -185,7 +200,7 @@ def q_tree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             unnest({TR.edges_sql('words', 'tg', 'ch')}) AS e
           FROM tr4)
     ORDER BY doc_id, child""",
-)
+    order=("doc_id", "child"))
 def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/A9 tree-STRUCTURED column (VERDICT r02 #7): the flattened edge
     array per SURVEY §1.4 — ROOT → S → NP/VP chunk nodes (with the
@@ -194,8 +209,7 @@ def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sr_parse_test.clj:26-49). One row per edge from the declared Arrow
     kernel parse_tree_edge_rows (behind spread_small_input); the only
     shuffle is the final presentation sort."""
-    return TR.parse_tree_edge_rows(_docs(spark, sf_dir)) \
-             .repartition(1).sortWithinPartitions("doc_id", "child")
+    return TR.parse_tree_edge_rows(_docs(spark, sf_dir))
 
 
 @register(
@@ -209,7 +223,7 @@ def q_parse_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             unnest({TR.dep_edges_sql('words', 'tg', 'ch')}) AS e
           FROM tr5)
     ORDER BY doc_id, dependent""",
-)
+    order=("doc_id", "dependent"))
 def q_dep_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 dependency tree as a traversable edge list (reference
     stanford.clj:395-405; root election = reference root-dependency
@@ -218,8 +232,7 @@ def q_dep_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per token from the declared Arrow kernel dep_edge_rows (behind
     spread_small_input); the only shuffle is the final presentation
     sort."""
-    return TR.dep_edge_rows(_docs(spark, sf_dir)) \
-             .repartition(1).sortWithinPartitions("doc_id", "dependent")
+    return TR.dep_edge_rows(_docs(spark, sf_dir))
 
 
 @register(
@@ -230,7 +243,7 @@ def q_dep_tree_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(len(list_distinct(list_transform(list_filter(toks, x -> x.is_go),
            x -> x.word))) AS BIGINT) AS n_distinct_go
     FROM tk ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_go_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F13 go-word filtering (reference stopword.clj:16-50). The go-word
     array is let-bound once per row — naming it in both output columns
@@ -244,7 +257,7 @@ def q_go_words(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"'n_distinct_go', cast(size(array_distinct(z)) as bigint))), 1)")
     return (_docs(spark, sf_dir)
             .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+            .select("doc_id", "__f.*"))
 
 
 # ------------------------------------------------- as-of join + window ops
@@ -282,12 +295,12 @@ def _q_asof(strategy: str):
             F.unix_millis("ts").alias("event_ts_ms"),
             F.unix_millis("fts").alias("feature_ts_ms"),
             "fval",
-        ).repartition(1).sortWithinPartitions("event_id")
+        )
     return q
 
 
-register("asof_join", _ASOF_ORACLE)(_q_asof("union_window"))
-register("asof_join_merge", _ASOF_ORACLE)(_q_asof("merge_asof"))
+register("asof_join", _ASOF_ORACLE, order=("event_id",))(_q_asof("union_window"))
+register("asof_join_merge", _ASOF_ORACLE, order=("event_id",))(_q_asof("merge_asof"))
 
 
 @register(
@@ -314,7 +327,7 @@ register("asof_join_merge", _ASOF_ORACLE)(_q_asof("merge_asof"))
            THEN bval ELSE fv END AS fval
     FROM b JOIN f USING (event_id)
     ORDER BY b.event_id""",
-)
+    order=("event_id",))
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-direction as-of (pd.merge_asof direction='nearest'): each
     event takes whichever of the latest-before / earliest-after feature is
@@ -331,10 +344,10 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    )
 
 
-@register("asof_incremental", _ASOF_ORACLE)
+@register("asof_incremental", _ASOF_ORACLE, order=("event_id",))
 def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental feature-store maintenance: previous output is built from
     a BASE feature subset, then a batch (every 4th feature row) arrives and
@@ -354,7 +367,7 @@ def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    )
 
 
 @register(
@@ -369,7 +382,7 @@ def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lefts l ASOF LEFT JOIN rights r
       ON l.user_id = r.user_id AND l.ts <= r.fts
     ORDER BY l.event_id""",
-)
+    order=("event_id",))
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward (inclusive) as-of join — earliest feature_ts >= event_ts per
     entity; the label-join direction of pd.merge_asof. Same one-shuffle
@@ -384,7 +397,7 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    )
 
 
 _ASOF_TOL_MS = 1800 * 1000  # 30 min staleness bound
@@ -406,7 +419,7 @@ _ASOF_TOL_MS = 1800 * 1000  # 30 min staleness bound
       CASE WHEN fts IS NULL OR epoch_ms(ts) - epoch_ms(fts) > {_ASOF_TOL_MS}
            THEN NULL ELSE fval END AS fval
     FROM j ORDER BY event_id""",
-)
+    order=("event_id",))
 def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of with a staleness bound (pd.merge_asof tolerance):
     matches farther than 30 min from the event are nulled — exact, because
@@ -421,7 +434,7 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("event_ts_ms"),
         F.unix_millis("fts").alias("feature_ts_ms"),
         "fval",
-    ).repartition(1).sortWithinPartitions("event_id")
+    )
 
 
 @register(
@@ -433,14 +446,13 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ORDER BY event_id""",
-)
+    order=("event_id",))
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag/lead per entity (SURVEY.md §2.7)."""
     from clj_nlp_parse_spark.operators import windows
     out = windows.with_lag_lead(_events(spark, sf_dir), {"value": 1})
     out = windows.with_lag_lead(out, {"value": -1})
-    return out.select("event_id", "user_id", "value_lag1", "value_lead1") \
-              .repartition(1).sortWithinPartitions("event_id")
+    return out.select("event_id", "user_id", "value_lag1", "value_lead1")
 
 
 @register(
@@ -458,12 +470,12 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT)
         AS session_id
     FROM g ORDER BY event_id""",
-)
+    order=("event_id",))
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization, 30-min gap (SURVEY.md §2.7 cumsum idiom)."""
     from clj_nlp_parse_spark.operators import windows
     out = windows.sessionize(_events(spark, sf_dir), gap_seconds=1800)
-    return out.select("event_id", "user_id", "session_id").repartition(1).sortWithinPartitions("event_id")
+    return out.select("event_id", "user_id", "session_id")
 
 
 @register(
@@ -477,7 +489,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
       value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id)
         AS delta
     FROM events ORDER BY event_id""",
-)
+    order=("event_id",))
 def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling per-entity features (trailing mean/max over 3 rows + delta
     vs previous) — one window partitioning shared by all three outputs, so
@@ -492,7 +504,7 @@ def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg("value").over(w3).alias("roll_mean3"),
         F.max("value").over(w3).alias("roll_max3"),
         (F.col("value") - F.lag("value").over(wl)).alias("delta"),
-    ).repartition(1).sortWithinPartitions("event_id")
+    )
 
 
 @register(
@@ -505,7 +517,7 @@ def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
       max(value) AS max_value
     FROM events GROUP BY user_id, CAST(ts AS DATE)
     ORDER BY user_id, day""",
-)
+    order=("user_id", "day"))
 def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style time rollup: per (entity, day) aggregates — one
     combiner-friendly hash agg; the aligned materialization a downstream
@@ -515,8 +527,7 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_events"),
                  F.sum("value").alias("sum_value"),
                  F.min("value").alias("min_value"),
-                 F.max("value").alias("max_value"))
-            .repartition(1).sortWithinPartitions("user_id", "day"))
+                 F.max("value").alias("max_value")))
 
 
 @register(
@@ -540,7 +551,7 @@ def q_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
       sum(value) AS sum_value
     FROM s GROUP BY user_id, session_id
     ORDER BY user_id, session_id""",
-)
+    order=("user_id", "session_id"))
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session feature vector (duration, event count, value sum) on top
     of gap sessionization — the windowed feature a session-level model
@@ -552,8 +563,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_events"),
                  (F.unix_millis(F.max("ts")) - F.unix_millis(F.min("ts")))
                  .cast("long").alias("duration_ms"),
-                 F.sum("value").alias("sum_value"))
-            .repartition(1).sortWithinPartitions("user_id", "session_id"))
+                 F.sum("value").alias("sum_value")))
 
 
 @register(
@@ -566,7 +576,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         AS value_filled
     FROM events ORDER BY event_id""",
-)
+    order=("event_id",))
 def q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill of late/missing values (SURVEY.md §2.7); nulls injected
     deterministically on every 5th event."""
@@ -575,7 +585,7 @@ def q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_n",
         F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(F.col("value")))
     out = windows.backfill(ev, "value_n", out_col="value_filled")
-    return out.select("event_id", "user_id", "value_filled").repartition(1).sortWithinPartitions("event_id")
+    return out.select("event_id", "user_id", "value_filled")
 
 
 # --------------------------------------------------- word-count featurizer
@@ -610,7 +620,7 @@ ORDER BY dd.doc_id, l.label"""
            CAST(d.c AS DOUBLE) / CAST(t.total AS DOUBLE) AS prob
     FROM dist d JOIN tot t ON d.label = t.label
     ORDER BY d.label, d.word""",
-)
+    order=("label", "word"))
 def q_word_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 calculate-word-count-dist itself (reference word_count.clj:19-38):
     top-N words per label by count (deterministic tiebreak word asc — the
@@ -630,11 +640,10 @@ def q_word_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (topn.withColumn(
         "prob", F.col("c").cast("double")
         / F.sum("c").over(tot).cast("double"))
-        .select("label", "word", "prob")
-        .repartition(1).sortWithinPartitions("label", "word"))
+        .select("label", "word", "prob"))
 
 
-@register("word_count_scores", _WC_ORACLE)
+@register("word_count_scores", _WC_ORACLE, order=("doc_id", "label"))
 def q_word_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7-F12: fit word-count dist per lang label, score every doc.
     Long output (doc_id, label, score)."""
@@ -649,7 +658,7 @@ def q_word_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         "doc_id",
         F.expr(f"stack({len(labs)}, {stack}) AS (label, score)"),
-    ).repartition(1).sortWithinPartitions("doc_id", "label")
+    )
 
 
 # ------------------------------------------------ dictionary / mention engine
@@ -684,7 +693,7 @@ def _dict_cte() -> str:
            CAST(x.tok_end AS BIGINT) AS tok_end
     FROM (SELECT doc_id, unnest(mentions) AS x FROM mn)
     ORDER BY doc_id, item_id, tok_beg""",
-)
+    order=("doc_id", "item_id", "tok_beg"))
 def q_dict_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 token-regex/dictionary NER span tagging
     (reference tok_re.clj:112-191)."""
@@ -694,8 +703,7 @@ def q_dict_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.col("x.label").alias("label"),
                     F.col("x.item_id").alias("item_id"),
                     F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+                    F.col("x.tok_end").cast("long").alias("tok_end")))
 
 
 _MF_COLS_DUCK = []
@@ -714,7 +722,7 @@ for _e in sorted({i.label for i in DICT_ITEMS}):
     "mention_features",
     _dict_cte() + " SELECT doc_id, " + ", ".join(_MF_COLS_DUCK)
     + " FROM mn ORDER BY doc_id",
-)
+    order=("doc_id",))
 def q_mention_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 mentions-features, zero-defaulted
     (reference feature/lang.clj:193-237)."""
@@ -725,7 +733,7 @@ def q_mention_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tagged.select(
         "doc_id",
         *D.mentions_feature_cols("tok_re_mentions", "words", ents),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    )
 
 
 @register(
@@ -742,14 +750,13 @@ def q_mention_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  pos := i - 1, word := words[i]))))) AS x
           FROM mn)
     ORDER BY doc_id, item_id, pos""",
-)
+    order=("doc_id", "item_id", "pos"))
 def q_mention_token_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/O5/O7/O10 containment range join mention↔token
     (reference parse.clj:173-240)."""
     out = D.mention_token_join(_docs(spark, sf_dir), DICT_ITEMS)
     return out.select("doc_id", "label", "item_id",
-                      F.col("pos").cast("long").alias("pos"), "word") \
-              .repartition(1).sortWithinPartitions("doc_id", "item_id", "pos")
+                      F.col("pos").cast("long").alias("pos"), "word")
 
 
 # Dictionary OPTION parity (VERDICT r01 #1/#2): case_min_tok case-sensitive
@@ -804,7 +811,7 @@ def _dict_opt_cte() -> str:
            (x.features['food-type'])[1] AS food_type
     FROM (SELECT doc_id, unnest(mentions) AS x FROM mn)
     ORDER BY doc_id, item_id, tok_beg""",
-)
+    order=("doc_id", "item_id", "tok_beg"))
 def q_dict_mentions_options(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 dictionary NER with full option parity: case_min_tok,
     conj-regexp and|& alternation, verbatim is_regexp, det-chop ordering,
@@ -818,8 +825,7 @@ def q_dict_mentions_options(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("x.item_id").alias("item_id"),
                     F.col("x.tok_beg").cast("long").alias("tok_beg"),
                     F.col("x.tok_end").cast("long").alias("tok_end"),
-                    F.expr("x.features['food-type']").alias("food_type"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+                    F.expr("x.features['food-type']").alias("food_type")))
 
 
 # ------------------------------------------------------------- dedup suite
@@ -840,9 +846,9 @@ _WD_CTE = (f"WITH wd AS (SELECT doc_id, text, "
       CAST(count(*) OVER (PARTITION BY text_hash) AS BIGINT) AS group_size,
       doc_id = min(doc_id) OVER (PARTITION BY text_hash) AS keep
     FROM h ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.exact_dedup(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return DD.exact_dedup(_docs(spark, sf_dir))
 
 
 _MH_DUCK = DD.minhash_sig_sql("hs", "duck")
@@ -858,9 +864,9 @@ _MH_SIG_CTE = (_WD_CTE + f", sh AS (SELECT doc_id, "
 @register(
     "minhash_signatures",
     _MH_SIG_CTE + " SELECT * FROM sig ORDER BY doc_id",
-)
+    order=("doc_id",))
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.minhash_signatures(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return DD.minhash_signatures(_docs(spark, sf_dir))
 
 
 _SIG_COLS = [f"mh_{i}" for i in range(DD.MINHASH_K)]
@@ -876,9 +882,9 @@ _BANDS_DUCK = " UNION ALL ".join(
     FROM buckets l JOIN buckets r
       ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
     ORDER BY doc_a, doc_b""",
-)
+    order=("doc_a", "doc_b"))
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.lsh_candidate_pairs(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_a", "doc_b")
+    return DD.lsh_candidate_pairs(_docs(spark, sf_dir))
 
 
 @register(
@@ -888,9 +894,9 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              FROM wd)
     SELECT doc_id, {DD.simhash_sql('hs', 32, 'duck')} AS simhash
     FROM hh ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return DD.simhash(_docs(spark, sf_dir), bits=32).repartition(1).sortWithinPartitions("doc_id")
+    return DD.simhash(_docs(spark, sf_dir), bits=32)
 
 
 # candidate-pair CTE core, shared verbatim by the jaccard_pairs oracle and
@@ -917,15 +923,14 @@ _JP_CORE = _WD_CTE + f"""
     WHERE CAST(inter AS DOUBLE) / CAST(sa.nsh + sb.nsh - inter AS DOUBLE)
           >= 0.5
     ORDER BY doc_a, doc_b""",
-)
+    order=("doc_a", "doc_b"))
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-BASELINE ONLY — not a scale path. The unbounded inverted-index
     self-join goes quadratic on hot shingles at 100×; production uses
     jaccard_pairs_prefix (exact PPJoin, same oracle, measured 18.8× faster)
     or jaccard_pairs_capped. Kept registered so the pruning variants are
     provably lossless against it."""
-    return (DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+    return DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
 # ------------------------------------------------------- similarity search
@@ -943,7 +948,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
           AS rank
       FROM scored)
     WHERE rank <= 5 ORDER BY qid, rank""",
-)
+    order=("qid", "rank"))
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-BASELINE ONLY — not a scale path. Brute-force full scan per
     query by construction; production ANN is ivf_topk (cell-probe join,
@@ -954,8 +959,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     out = SIM.brute_force_topk(emb, queries, k=5)
     return out.select("qid", "vec_id", "cosine",
-                      F.col("rank").cast("int").alias("rank")) \
-              .repartition(1).sortWithinPartitions("qid", "rank")
+                      F.col("rank").cast("int").alias("rank"))
 
 
 # ----------------------------------------------------------- text analysis
@@ -977,9 +981,9 @@ _FP_DUCK = TS.fingerprint_sql("words", "duck")
       {_FP_DUCK['fp_max']} AS fp_max,
       {_FP_DUCK['fp_n']} AS fp_n
     FROM wd ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TS.text_stats(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return TS.text_stats(_docs(spark, sf_dir))
 
 
 # O9 tokens-for-mention: synthesized mention per doc (sent_index = doc_id%4
@@ -1010,7 +1014,7 @@ _SW_DUCK = features.sentence_words_sql("text", "duck")
               t -> t)) AS x
           FROM g)
     ORDER BY doc_id, pos""",
-)
+    order=("doc_id", "pos"))
 def q_tokens_for_mention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O9 tokens-for-mention (reference parse.clj:221-228): the mention's
     sentence's tokens filtered by utterance-token-range containment, with
@@ -1037,7 +1041,7 @@ def q_tokens_for_mention(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t -> off <= t.p AND t.p < off + 2)")).alias("x"))
     return pairs.select(
         "doc_id", F.col("x.w").alias("word"),
-        F.col("x.p").cast("long").alias("pos")).repartition(1).sortWithinPartitions("doc_id", "pos")
+        F.col("x.p").cast("long").alias("pos"))
 
 
 _PH_SPARK = dialect.hash32_expr(DD.norm_text_sql("text", "spark"), "spark")
@@ -1064,7 +1068,7 @@ _PH_CORPUS_CTE = f"""base AS (SELECT doc_id, {_PH_DUCK} AS ph FROM documents),
     FROM allv a JOIN allv b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.ph, b.ph)) <= 2
     ORDER BY id_a, id_b""",
-)
+    order=("id_a", "id_b"))
 def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash hamming near-dup pairs (image dedup on the
     north_star's phash column). Candidates come from banded equi-joins
@@ -1074,8 +1078,7 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     no binary column); near-dups injected at hamming 1 (must match) and
     hamming 3 (must not)."""
     allv = _phash_corpus(spark, sf_dir)
-    out = DD.phash_near_dup_pairs(allv, max_hamming=2, phash_col="ph")
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return DD.phash_near_dup_pairs(allv, max_hamming=2, phash_col="ph")
 
 
 def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1110,7 +1113,7 @@ def _phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(c.component, a.doc_id) = a.doc_id AS keep
     FROM allv a LEFT JOIN comp c ON c.node = a.doc_id
     ORDER BY a.doc_id""",
-)
+    order=("image_id",))
 def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 10^12-image dedup decision end-to-end: phash hamming pairs
     (pigeonhole-banded equi-join, never quadratic) → connected components →
@@ -1134,8 +1137,7 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
              .unionByName(star))
     comp = DD.connected_components(edges, "doc_a", "doc_b")
     return DD.keep_list(
-        allv.select(F.col("doc_id").alias("image_id")), comp, "image_id") \
-        .repartition(1).sortWithinPartitions("image_id")
+        allv.select(F.col("doc_id").alias("image_id")), comp, "image_id")
 
 
 @register(
@@ -1155,12 +1157,11 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
             ORDER BY tfidf DESC, w ASC) AS rank FROM scored)
     WHERE rank <= 3 ORDER BY doc_id, rank""",
-)
+    order=("doc_id", "rank"))
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top-3 terms per doc (training-pipeline text feature):
     two combiner-friendly hash aggs + broadcast N + doc-window top-k."""
-    return TS.tfidf_top_terms(_docs(spark, sf_dir), k=3) \
-             .repartition(1).sortWithinPartitions("doc_id", "rank")
+    return TS.tfidf_top_terms(_docs(spark, sf_dir), k=3)
 
 
 from clj_nlp_parse_spark.operators import sketches as SK
@@ -1169,14 +1170,14 @@ from clj_nlp_parse_spark.operators import sketches as SK
 @register(
     "kmv_distinct",
     SK.kmv_sql("user_id % 10", "event_id", 64, "duck") + " ORDER BY g",
-)
+    order=("g",))
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-count sketch per user bucket (deterministic mergeable
     sketch — bit-exact across engines unlike HLL, so the oracle verifies
     the estimate itself; accuracy + mergeability property-tested)."""
     ev = _events(spark, sf_dir)
     df = ev.select((F.col("user_id") % 10).alias("g"), "event_id")
-    return SK.kmv_distinct(df, ["g"], "event_id", k=64).repartition(1).sortWithinPartitions("g")
+    return SK.kmv_distinct(df, ["g"], "event_id", k=64)
 
 
 @register(
@@ -1192,7 +1193,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "ORDER BY c DESC, word ASC LIMIT 10)"),
         item_expr="word",
     ) + " ORDER BY word",
-)
+    order=("word",))
 def q_cm_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch point estimates for the corpus's 10 most frequent
     words (deterministic md5 hash rows — the estimate itself is
@@ -1206,8 +1207,7 @@ def q_cm_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (tok.groupBy("w").agg(F.count("*").alias("c"))
            .orderBy(F.desc("c"), F.asc("w")).limit(10)
            .select(F.col("w").alias("word")))
-    return (SK.cm_point_estimates(sketch, top, item_col="word")
-            .repartition(1).sortWithinPartitions("word"))
+    return SK.cm_point_estimates(sketch, top, item_col="word")
 
 
 _SAMPLE_H = DD.h31_sql("cast(doc_id as string)", "spark")
@@ -1220,7 +1220,7 @@ _SAMPLE_H_DUCK = DD.h31_sql("CAST(doc_id AS VARCHAR)", "duck")
     SELECT doc_id, lang FROM documents
     WHERE {_SAMPLE_H_DUCK} < CAST(0.2 * 2147483647 AS BIGINT)
     ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_consistent_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic consistent sampling (training-pipeline op): keep rows
     whose key-hash falls under the rate threshold. Unlike df.sample() it is
@@ -1230,7 +1230,7 @@ def q_consistent_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     thr = int(0.2 * 2147483647)
     return (docs.where(F.expr(_SAMPLE_H) < thr)
-            .select("doc_id", "lang").repartition(1).sortWithinPartitions("doc_id"))
+            .select("doc_id", "lang"))
 
 
 def consistent_sample_py(doc_ids: list[int], rate: float = 0.2) -> set[int]:
@@ -1257,7 +1257,7 @@ def consistent_sample_py(doc_ids: list[int], rate: float = 0.2) -> set[int]:
     FROM d
     WHERE keep AND lang_pred = 'en' AND quality >= 0.4 AND len(words) >= 10
     ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data admission filter (the composition a 100 TB
     curation pipeline actually runs): language-ID + quality threshold +
@@ -1279,8 +1279,7 @@ def q_training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = q.withColumn("keep", F.col("doc_id") == F.min("doc_id").over(w))
     return (d.where(F.col("keep") & (F.col("lang_pred") == "en")
                     & (F.col("quality") >= 0.4) & (F.col("n_words") >= 10))
-            .select("doc_id", "lang_pred", "quality", "n_words")
-            .repartition(1).sortWithinPartitions("doc_id"))
+            .select("doc_id", "lang_pred", "quality", "n_words"))
 
 
 @register(
@@ -1298,7 +1297,7 @@ def q_training_corpus_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0) d
     LEFT JOIN bad b ON b.doc_id = d.doc_id
     ORDER BY d.doc_id""",
-)
+    order=("doc_id",))
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set decontamination (GPT-3 appendix-C-shaped): every training
     doc sharing a 3-gram with the held-out eval split (doc_id % 97 = 0) is
@@ -1308,7 +1307,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ev = docs.where(F.col("doc_id") % 97 == 0)
     tr = docs.where(F.col("doc_id") % 97 != 0)
-    return DD.decontaminate(tr, ev, n=3).repartition(1).sortWithinPartitions("doc_id")
+    return DD.decontaminate(tr, ev, n=3)
 
 
 _CURATION_SQL = _WD_CTE + f"""
@@ -1345,7 +1344,7 @@ _CURATION_SQL = _WD_CTE + f"""
     ORDER BY d.doc_id"""
 
 
-@register("curation_pipeline", _CURATION_SQL)
+@register("curation_pipeline", _CURATION_SQL, order=("doc_id",))
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE training-data admission decision as ONE composed plan —
     what a 100 TB curation job actually submits: language-ID + quality +
@@ -1359,12 +1358,12 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ev = docs.where(F.col("doc_id") % 97 == 0)
     tr = docs.where(F.col("doc_id") % 97 != 0)
-    return CU.curation_decide(tr, ev, n=3).repartition(1).sortWithinPartitions("doc_id")
+    return CU.curation_decide(tr, ev, n=3)
 
 
 # oracle = the FULL recompute: incremental maintenance must be
 # indistinguishable from rerunning the whole pipeline
-@register("curation_incremental", _CURATION_SQL)
+@register("curation_incremental", _CURATION_SQL, order=("doc_id",))
 def q_curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental curation maintenance — the daily-crawl-increment job:
     the corpus is split at the 80th percentile of ids (a crawl increment
@@ -1384,8 +1383,7 @@ def q_curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tr.where(F.col("doc_id") <= thr)
     batch = tr.where(F.col("doc_id") > thr)
     prev = CU.curation_decide(base, ev, n=3)
-    out = CU.incremental_curation(prev, CU.hash_state(base), batch, ev, n=3)
-    return out.repartition(1).sortWithinPartitions("doc_id")
+    return CU.incremental_curation(prev, CU.hash_state(base), batch, ev, n=3)
 
 
 @register(
@@ -1399,7 +1397,7 @@ def q_curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     SELECT doc_id, lang FROM ranked WHERE rn <= 40
     ORDER BY lang, doc_id""",
-)
+    order=("lang", "doc_id"))
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-quota stratified sampling per language — the training-mix
     operator ('40 docs per lang'): deterministic md5 order inside each
@@ -1413,8 +1411,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (docs.select("doc_id", "lang",
                         F.row_number().over(w).alias("rn"))
             .where(F.col("rn") <= 40)
-            .select("doc_id", "lang")
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+            .select("doc_id", "lang"))
 
 
 _MIX_QUOTA_CTES = """
@@ -1440,7 +1437,7 @@ _MIX_QUOTA_CTES = """
     FROM r JOIN q ON r.lang IS NOT DISTINCT FROM q.lang
     WHERE r.rn <= q.q
     ORDER BY r.lang, r.doc_id""",
-)
+    order=("lang", "doc_id"))
 def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based corpus mixing (the pretraining data-mix op,
     LLaMA/data-mixture-style): per-language quotas ∝ n^0.5 (temperature-2
@@ -1471,8 +1468,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (ranked.join(F.broadcast(quota),
                         ranked["lang"].eqNullSafe(quota["lang"]))
             .where(F.col("rn") <= F.col("q"))
-            .select(ranked["doc_id"], ranked["lang"])
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+            .select(ranked["doc_id"], ranked["lang"]))
 
 
 @register(
@@ -1486,7 +1482,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d JOIN thr ON d.lang IS NOT DISTINCT FROM thr.lang
     WHERE ({DD.h31_sql('CAST(doc_id AS VARCHAR)', 'duck')}) < thr.thr
     ORDER BY d.lang, d.doc_id""",
-)
+    order=("lang", "doc_id"))
 def q_corpus_mix_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for corpus mixing: instead of an exact per-stratum
     rank (whose window must sort whole strata once quotas stop being
@@ -1515,8 +1511,7 @@ def q_corpus_mix_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (docs.join(F.broadcast(thr),
                       docs["lang"].eqNullSafe(F.col("mix_lang")))
             .where(h < F.col("thr"))
-            .select("doc_id", "lang")
-            .repartition(1).sortWithinPartitions("lang", "doc_id"))
+            .select("doc_id", "lang"))
 
 
 def corpus_mix_py(docs: list[tuple], exact: bool = True) -> set[tuple]:
@@ -1635,7 +1630,7 @@ def _passage_doc_agg(marked: DataFrame) -> DataFrame:
             " ").alias("scrubbed_text"))
 
 
-@register("passage_dedup", _PASSAGE_SQL)
+@register("passage_dedup", _PASSAGE_SQL, order=("doc_id",))
 def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring (passage) dedup, Lee-et-al-2021-shaped: chunk each
     doc into non-overlapping PASSAGE_K-token passages, find passages whose
@@ -1663,10 +1658,10 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ((F.col("first_occ.doc_id") == F.col("doc_id"))
                        & (F.col("first_occ.chunk_pos")
                           == F.col("chunk_pos"))).alias("is_first")))
-    return _passage_doc_agg(marked).repartition(1).sortWithinPartitions("doc_id")
+    return _passage_doc_agg(marked)
 
 
-@register("passage_dedup_incremental", _PASSAGE_SQL)
+@register("passage_dedup_incremental", _PASSAGE_SQL, order=("doc_id",))
 def q_passage_dedup_incremental(spark: SparkSession, sf_dir: str
                                 ) -> DataFrame:
     """Incremental passage-dedup maintenance — the daily-crawl-increment
@@ -1707,8 +1702,7 @@ def q_passage_dedup_incremental(spark: SparkSession, sf_dir: str
                 .alias("is_first")))
 
     return (incremental_passage_update(
-        prev, hist_firsts, hist_chunks, batch_chunks)
-        .repartition(1).sortWithinPartitions("doc_id"))
+        prev, hist_firsts, hist_chunks, batch_chunks))
 
 
 def incremental_passage_update(prev: DataFrame, hist_firsts: DataFrame,
@@ -1830,7 +1824,7 @@ def pii_scrub_py(text: str) -> tuple:
       regexp_replace(regexp_replace(text, '{_RE_EMAIL}', '<EMAIL>', 'g'),
                      '{_RE_URL}', '<URL>', 'g') AS scrubbed
     FROM src ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII/URL scrubbing for training corpora: count + redact emails and
     URLs in one projection (pure Catalyst regexp — no Python, fully
@@ -1846,8 +1840,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("n_urls"),
         F.regexp_replace(
             F.regexp_replace("text", _RE_EMAIL, "<EMAIL>"),
-            _RE_URL, "<URL>").alias("scrubbed"))
-        .repartition(1).sortWithinPartitions("doc_id"))
+            _RE_URL, "<URL>").alias("scrubbed")))
 
 
 @register(
@@ -1879,7 +1872,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS top_3gram_frac
     FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
     ORDER BY d.doc_id""",
-)
+    order=("doc_id",))
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style within-document repetition signals: duplicate-3-gram
     fraction and most-frequent-3-gram mass. Implemented as explode + two
@@ -1915,8 +1908,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(total == 0, F.lit(0.0)).otherwise(
                     F.col("top_count").cast("double")
                     / F.col("total_3grams").cast("double"))
-                .alias("top_3gram_frac"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+                .alias("top_3gram_frac")))
 
 
 def _lm_oracle() -> str:
@@ -1924,7 +1916,7 @@ def _lm_oracle() -> str:
     return LM.oracle_sql()
 
 
-@register("lm_perplexity", None)
+@register("lm_perplexity", _lm_oracle(), order=("doc_id",))
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM perplexity quality scoring (CCNet-style corpus signal):
     add-one bigram LM fit on the consistent-sample train split, every doc
@@ -1933,10 +1925,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     train scan -> localCheckpointed model table; one corpus scan ->
     broadcast model join -> per-doc re-agg (operators/lm.py)."""
     from clj_nlp_parse_spark.operators import lm as LM
-    return LM.fit_score(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
-
-
-ORACLES["lm_perplexity"] = _lm_oracle()
+    return LM.fit_score(_docs(spark, sf_dir))
 
 
 def repetition_stats_py(text: str | None) -> tuple:
@@ -1983,7 +1972,7 @@ def repetition_stats_py(text: str | None) -> tuple:
     JOIN p50 ON b.lang IS NOT DISTINCT FROM p50.lang
     JOIN p90 ON b.lang IS NOT DISTINCT FROM p90.lang
     ORDER BY b.lang""",
-)
+    order=("lang",))
 def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus data-quality profile per language: doc/empty counts, token
     totals, exact-dup distinct texts, and NEAREST-RANK p50/p90 token-count
@@ -2036,8 +2025,7 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(p90, F.col("lang").eqNullSafe(F.col("__l90")))
             .select("lang", "n_docs", "n_empty", "total_tokens",
                     "avg_tokens", "distinct_texts", "p50_tokens",
-                    "p90_tokens")
-            .repartition(1).sortWithinPartitions("lang"))
+                    "p90_tokens"))
 
 
 #: target max rows sorted by one packing window task. The md5-prefix width
@@ -2100,7 +2088,7 @@ def choose_pack_chunk_hex(w: DataFrame,
            CAST((cum - n_tokens) // 512 AS BIGINT) AS seq_id,
            CAST((cum - n_tokens) % 512 AS BIGINT) AS seq_offset
     FROM c ORDER BY lang, seq_id, doc_id""",
-)
+    order=("lang", "seq_id", "doc_id"))
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining sequence packing: docs are laid out deterministically
     (md5 order per language stratum) along a token axis; each doc is
@@ -2156,8 +2144,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (c.select(
         "doc_id", "lang", "n_tokens",
         F.floor(start / 512).cast("long").alias("seq_id"),
-        (start % 512).cast("long").alias("seq_offset"))
-        .repartition(1).sortWithinPartitions("lang", "seq_id", "doc_id"))
+        (start % 512).cast("long").alias("seq_offset")))
 
 
 def corpus_profile_py(docs: list[tuple]) -> list[tuple]:
@@ -2235,7 +2222,7 @@ _CHUNK_TEXT = ("replace(replace(replace(text, ' scan ', "
     + ") UNION ALL ("
     + CH.chunks_sql(CH.VP_TAGS, CH.VP_HEAD_TAGS, "VP", "chunk_src")
     + ") ORDER BY doc_id, label, chunk_index",
-)
+    order=("doc_id", "label", "chunk_index"))
 def q_np_vp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8-surface deterministic shallow chunking: maximal NP and VP spans
     over the rule tagger's output, with head election — the span-extraction
@@ -2246,9 +2233,7 @@ def q_np_vp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
-    return (CH.chunk_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "label", "chunk_index"))
+    return CH.chunk_rows(docs)
 
 
 # --------------------------------------------------------- image pipeline
@@ -2323,7 +2308,7 @@ def _purge_stale_scratch(keep: str, app_id: str,
     FROM p ASOF LEFT JOIN s r
       ON p.entity_id = r.entity_id AND p.event_ts >= r.feature_ts
     ORDER BY p.entity_id, event_ts_ms""",
-)
+    order=("entity_id", "event_ts_ms"))
 def q_image_feature_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule flagship, now oracle-checked (VERDICT_r03 #3):
     synthesize the input_hint image table deterministically, extract
@@ -2371,8 +2356,7 @@ def q_image_feature_materialization(spark: SparkSession, sf_dir: str) -> DataFra
         "entity_id",
         F.unix_millis("event_ts").alias("event_ts_ms"),
         F.unix_millis("feature_ts").alias("feature_ts_ms"),
-        "px_mean_r", "px_std", "sharpness")
-        .repartition(1).sortWithinPartitions("entity_id", "event_ts_ms"))
+        "px_mean_r", "px_std", "sharpness"))
 
 
 # -------------------------------------------------- SRL selection + verb id
@@ -2392,7 +2376,7 @@ def q_image_feature_materialization(spark: SparkSession, sf_dir: str) -> DataFra
           FROM a)
     SELECT sent_id, cand_id, score, has_label, tok_count
     FROM r WHERE rn = 1 ORDER BY sent_id""",
-)
+    order=("sent_id",))
 def q_srl_best_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O13/O14 SRL candidate ranking + short-sentence label preference
     (reference srl.clj:110-132); candidates synthesized from events."""
@@ -2404,7 +2388,7 @@ def q_srl_best_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("score"),
         (F.col("event_id") % 2 == 0).alias("has_label"),
         (F.col("user_id") % 6 + 1).cast("int").alias("tok_count"))
-    return srl.select_best_candidates(cands).repartition(1).sortWithinPartitions("sent_id")
+    return srl.select_best_candidates(cands)
 
 
 _VERB_DUCK = dialect.hash32_expr("elected_verb", "duck")
@@ -2423,15 +2407,15 @@ _VERB_DUCK = dialect.hash32_expr("elected_verb", "duck")
       FROM rt)
     SELECT doc_id, elected_verb, {_VERB_DUCK} AS elected_verb_id
     FROM ev ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_verb_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 verb-features with deterministic dep-root
     (reference feature/lang.clj:33-59)."""
     from clj_nlp_parse_spark.operators import srl
-    return srl.verb_features(_docs(spark, sf_dir)).repartition(1).sortWithinPartitions("doc_id")
+    return srl.verb_features(_docs(spark, sf_dir))
 
 
-register("asof_join_split", _ASOF_ORACLE)(_q_asof("union_window_split"))
+register("asof_join_split", _ASOF_ORACLE, order=("event_id",))(_q_asof("union_window_split"))
 
 
 # ------------------------------------------------------ remaining O/F covers
@@ -2447,7 +2431,7 @@ register("asof_join_split", _ASOF_ORACLE)(_q_asof("union_window_split"))
            WHEN s = 0 THEN 'neutral' WHEN s = -1 THEN 'negative'
            ELSE 'very negative' END AS sentiment_label
     FROM sc ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_sentiment_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O11 sentiment-score-to-label (reference parse.clj:242-252)."""
     from clj_nlp_parse_spark.functions.parse import sentiment_label
@@ -2455,7 +2439,7 @@ def q_sentiment_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sf.select(
         "doc_id", F.col("sentiment_utterance").alias("sentiment"),
         sentiment_label(F.col("sentiment_utterance")).alias("sentiment_label"),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    )
 
 
 _PTYPE = dialect.pos_type_case_expr("x.pos_tag")
@@ -2470,7 +2454,7 @@ _PDESC = dialect.pos_description_case_expr("x.pos_tag")
            ({_PDESC}) AS pos_description
     FROM (SELECT doc_id, unnest(toks) AS x FROM tk)
     ORDER BY doc_id, word, pos_tag""",
-)
+    order=("doc_id", "word", "pos_tag"))
 def q_pos_tag_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O12 pos-tag-type taxonomy lookup per token, including the Penn
     Treebank tag description (reference parse.clj:24-123)."""
@@ -2483,8 +2467,7 @@ def q_pos_tag_taxonomy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("x.pos_tag").alias("pos_tag"),
                     F.coalesce(F.col("x.pos_type"), F.lit("none"))
                     .alias("pos_type"),
-                    F.expr(_PDESC).alias("pos_description"))
-            .repartition(1).sortWithinPartitions("doc_id", "word", "pos_tag"))
+                    F.expr(_PDESC).alias("pos_description")))
 
 
 _WC_LEMMA_ORACLE = _duck_toks_cte() + """
@@ -2509,7 +2492,7 @@ LEFT JOIN hits h ON h.doc_id = dd.doc_id AND h.label = l.label
 ORDER BY dd.doc_id, l.label"""
 
 
-@register("word_count_scores_lemma", _WC_LEMMA_ORACLE)
+@register("word_count_scores_lemma", _WC_LEMMA_ORACLE, order=("doc_id", "label"))
 def q_word_count_scores_lemma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7-F12 with the lemma word-form variant (stopword.clj:24-26
     word-form-fn alternative)."""
@@ -2524,7 +2507,7 @@ def q_word_count_scores_lemma(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         "doc_id",
         F.expr(f"stack({len(labs)}, {stack}) AS (label, score)"),
-    ).repartition(1).sortWithinPartitions("doc_id", "label")
+    )
 
 
 _WC_CTES = _WC_ORACLE[:_WC_ORACLE.index("SELECT dd.doc_id")]
@@ -2546,7 +2529,7 @@ _WC_CTES = _WC_ORACLE[:_WC_ORACLE.index("SELECT dd.doc_id")]
                            ORDER BY score DESC, label ASC) AS rn
       FROM ranked WHERE score > 0)
     WHERE rn <= 2 ORDER BY doc_id, rn""",
-)
+    order=("doc_id", "rn"))
 def q_top_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11 top-count-scores (reference word_count.clj:103-117)."""
     from clj_nlp_parse_spark.operators.word_count import WordCountFeaturizer
@@ -2556,8 +2539,7 @@ def q_top_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = fz.fit(docs)
     out = fz.top_count_scores(docs, model, num_counts=2, id_col="doc_id")
     return out.select("doc_id", "label", "score",
-                      F.col("rn").cast("int").alias("rn")) \
-              .repartition(1).sortWithinPartitions("doc_id", "rn")
+                      F.col("rn").cast("int").alias("rn"))
 
 
 @register(
@@ -2573,7 +2555,7 @@ def q_top_count_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON p.user_id = i.user_id
      AND i.beg_ms <= p.p_ms AND p.p_ms <= i.end_ms
     ORDER BY p.event_id, i.iv_id""",
-)
+    order=("event_id", "iv_id"))
 def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/O5 interval-overlap/containment as a TABLE-level range join
     (reference parse.clj:173-192): equi-join on the entity plus range
@@ -2587,8 +2569,7 @@ def q_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("event_id", "user_id", F.unix_millis("ts").alias("p_ms")))
     out = pts.join(iv, (pts.user_id == iv.user_id)
                    & (iv.beg_ms <= pts.p_ms) & (pts.p_ms <= iv.end_ms))
-    return out.select(pts.event_id, pts.user_id, iv.iv_id) \
-              .repartition(1).sortWithinPartitions("event_id", "iv_id")
+    return out.select(pts.event_id, pts.user_id, iv.iv_id)
 
 
 _PLANES = SIM._hyperplanes(64, 6)  # embeddings dim is 64 in testdata
@@ -2608,7 +2589,7 @@ _COS_DUCK = SIM.cosine_sql("a.embedding", "b.embedding", "duck")
     FROM vb a JOIN vb b ON a.b = b.b AND a.vec_id < b.vec_id
     WHERE {_COS_DUCK} >= 0.99
     ORDER BY id_a, id_b""",
-)
+    order=("id_a", "id_b"))
 def q_cosine_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (dedup suite, round brief). The
     testdata embeddings are random (max pairwise cosine ~0.51), so exact
@@ -2618,8 +2599,7 @@ def q_cosine_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dups = (emb.where(F.col("vec_id") < 50)
             .select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding"))
     e = emb.select("vec_id", "embedding").unionByName(dups)
-    out = SIM.cosine_dedup_pairs(e, threshold=0.99, dim=64, n_planes=6)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return SIM.cosine_dedup_pairs(e, threshold=0.99, dim=64, n_planes=6)
 
 
 @register(
@@ -2645,7 +2625,7 @@ def q_cosine_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(c.component, e.vec_id) = e.vec_id AS keep
     FROM e LEFT JOIN comp c ON c.node = e.vec_id
     ORDER BY e.vec_id""",
-)
+    order=("vec_id",))
 def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-modality dedup GROUPS + canonical keep list — completes
     the dedup-groups family across all three modalities (text
@@ -2675,8 +2655,7 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("id_b").alias("doc_b"))
              .unionByName(star))
     comp = DD.connected_components(edges, "doc_a", "doc_b")
-    return DD.keep_list(e.select("vec_id"), comp, "vec_id") \
-             .repartition(1).sortWithinPartitions("vec_id")
+    return DD.keep_list(e.select("vec_id"), comp, "vec_id")
 
 
 @register(
@@ -2700,7 +2679,7 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(inter AS DOUBLE) / CAST(sa.nsh + sb.nsh - inter AS DOUBLE)
           >= 0.5
     ORDER BY doc_a, doc_b""",
-)
+    order=("doc_a", "doc_b"))
 def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup with document-frequency cap (df > 20 shingles
     dropped from the inverted index) — the skew kill for hot shingles;
@@ -2708,12 +2687,11 @@ def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard denominator still uses FULL shingle-set sizes, so scores are
     exact for pairs whose intersection survives the cap."""
     return (DD.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5,
-                                   max_df=20)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+                                   max_df=20))
 
 
 # same result set as jaccard_pairs (prefix filtering is exact) → same oracle
-@register("jaccard_pairs_prefix", ORACLES["jaccard_pairs"])
+@register("jaccard_pairs_prefix", ORACLES["jaccard_pairs"], order=("doc_a", "doc_b"))
 def q_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard pairs via prefix filtering (AllPairs/PPJoin) — only
     each doc's rarest |s|-ceil(t|s|)+1 shingles are indexed/joined, so hot
@@ -2725,8 +2703,7 @@ def q_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast build, both verify sides), and the self-join's broadcast
     # side otherwise recomputes the whole scan+shingle derivation
     shingled = DD.with_shingles(_docs(spark, sf_dir)).localCheckpoint()
-    return (DD.prefix_pairs_from_shingles(shingled, 0.5)
-            .repartition(1).sortWithinPartitions("doc_a", "doc_b"))
+    return DD.prefix_pairs_from_shingles(shingled, 0.5)
 
 
 _GROUPS_CTES = _JP_CORE.replace("WITH wd", "WITH RECURSIVE wd") + """
@@ -2754,7 +2731,7 @@ _GROUPS_CTES = _JP_CORE.replace("WITH wd", "WITH RECURSIVE wd") + """
            coalesce(c.component, d.doc_id) = d.doc_id AS keep
     FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
     ORDER BY d.doc_id""",
-)
+    order=("doc_id",))
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS + canonical keep list: prefix-filtered exact Jaccard
     pairs → iterative min-label connected components → every doc labeled
@@ -2762,8 +2739,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same components by recursive-CTE transitive closure — feasible at
     oracle scale precisely because the engine's iterative form is the one
     that survives 100×."""
-    return DD.dedup_groups(_docs(spark, sf_dir), threshold=0.5) \
-             .repartition(1).sortWithinPartitions("doc_id")
+    return DD.dedup_groups(_docs(spark, sf_dir), threshold=0.5)
 
 
 @register(
@@ -2777,7 +2753,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 'train' ELSE 'eval' END AS split
     FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
     ORDER BY d.doc_id""",
-)
+    order=("doc_id",))
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-aware train/eval split (the GroupShuffleSplit of training
     pipelines): every doc is assigned train/eval by hashing its near-dup
@@ -2794,8 +2770,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (groups.select(
         "doc_id", "component",
         F.when(h < 90, F.lit("train")).otherwise(F.lit("eval"))
-         .alias("split"))
-        .repartition(1).sortWithinPartitions("doc_id"))
+         .alias("split")))
 
 
 # ----------------------------------------------- positional / slice (O2, O8)
@@ -2809,7 +2784,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
       coalesce(array_to_string(list_slice(words, 2, 4), ' '), '')
         AS slice_2_4
     FROM tk ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_token_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 positional nth access + O8 token-range slice
     (reference parse.clj:157-165, 213-219): try_element_at is the null-safe
@@ -2825,7 +2800,7 @@ def q_token_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"x -> x.word), ' '))), 1)")
     return (_docs(spark, sf_dir)
             .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+            .select("doc_id", "__f.*"))
 
 
 def token_positional_py(text: str) -> tuple:
@@ -2874,7 +2849,7 @@ def _ner_cte() -> str:
              AS span
     FROM (SELECT doc_id, words, unnest(ms) AS x FROM nm)
     ORDER BY doc_id, tok_beg""",
-)
+    order=("doc_id", "tok_beg"))
 def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6-shaped model-side NER (reference CRF component config.clj:108-128,
     exercised by ner_test.clj; the model is out of scope — SURVEY.md §2.3):
@@ -2889,8 +2864,7 @@ def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("x.tok_beg").cast("long").alias("tok_beg"),
                     F.col("x.tok_end").cast("long").alias("tok_end"),
                     F.expr("array_join(slice(words, x.tok_beg + 1, "
-                           "x.tok_end - x.tok_beg), ' ')").alias("span"))
-            .repartition(1).sortWithinPartitions("doc_id", "tok_beg"))
+                           "x.tok_end - x.tok_beg), ' ')").alias("span")))
 
 
 # ------------------------------------------------- mention-source union (O6)
@@ -2919,7 +2893,7 @@ _COMPILED2 = D.compile_items(DICT_ITEMS2)
            CAST(x.tok_end AS BIGINT) AS tok_end
     FROM (SELECT doc_id, unnest(mentions) AS x FROM mu)
     ORDER BY doc_id, item_id, tok_beg""",
-)
+    order=("doc_id", "item_id", "tok_beg"))
 def q_mention_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6 union of mention sources (reference parse.clj:194-205): like the
     reference's :mentions ∪ :tok-re-mentions, GENUINELY DISTINCT sources —
@@ -2947,8 +2921,7 @@ def q_mention_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.col("x.label").alias("label"),
                     F.col("x.item_id").alias("item_id"),
                     F.col("x.tok_beg").cast("long").alias("tok_beg"),
-                    F.col("x.tok_end").cast("long").alias("tok_end"))
-            .repartition(1).sortWithinPartitions("doc_id", "item_id", "tok_beg"))
+                    F.col("x.tok_end").cast("long").alias("tok_end")))
 
 
 _MFU_DICT_LABELS = {i.label for i in DICT_ITEMS}
@@ -2982,7 +2955,7 @@ for _e in _MFU_ENTS:
            FROM mty)
     SELECT doc_id, """ + ", ".join(_MFU_COLS_DUCK)
     + " FROM ma ORDER BY doc_id",
-)
+    order=("doc_id",))
 def q_mention_features_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 mentions-features over BOTH mention sources (dictionary A7 +
     model-side A6 NER) — the reference's feature path consumes the merged
@@ -2998,7 +2971,7 @@ def q_mention_features_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.select(
         "doc_id",
         *D.mentions_feature_cols("all_mentions", "words", _MFU_ENTS),
-    ).repartition(1).sortWithinPartitions("doc_id")
+    )
 
 
 # ------------------------------------------- F3 srl features + O15 first scan
@@ -3043,7 +3016,7 @@ _SRL_D = _srl_frags("duck")
       {_SRL_D['argc']} AS srl_argument_counts,
       {_SRL_D['first_pb']} AS first_propbank_label
     FROM tk ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_srl_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 srl-features (reference feature/lang.clj:142-160: propbank-id =
     sum of hashes with nil→0; argument-counts = tokens with a first-head
@@ -3061,7 +3034,7 @@ def q_srl_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            f"'first_propbank_label', {s['first_pb']})), 1)")
     return (_docs(spark, sf_dir)
             .select("doc_id", F.expr(let).alias("__f"))
-            .select("doc_id", "__f.*").repartition(1).sortWithinPartitions("doc_id"))
+            .select("doc_id", "__f.*"))
 
 
 # --------------------------------------- O15 windowed first non-null (events)
@@ -3075,7 +3048,7 @@ def q_srl_features(spark: SparkSession, sf_dir: str) -> DataFrame:
       first(v ORDER BY ts, event_id) FILTER (WHERE v IS NOT NULL)
         AS first_value
     FROM e GROUP BY user_id ORDER BY user_id""",
-)
+    order=("user_id",))
 def q_first_non_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O15 first non-null over an ordered scan, windowed form
     (reference feature/lang.clj:15-31): F.first(ignorenulls=True) over the
@@ -3090,8 +3063,7 @@ def q_first_non_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (ev.withColumn("first_value", F.first("v", ignorenulls=True).over(w))
             .withColumn("__rn", F.row_number().over(rn))
             .where(F.col("__rn") == 1)
-            .select("user_id", "first_value")
-            .repartition(1).sortWithinPartitions("user_id"))
+            .select("user_id", "first_value"))
 
 
 # ----------------------------------------------------- IVF ANN (scale path 2)
@@ -3122,7 +3094,7 @@ _IVF_CELLS = SIM._centroids(64, SIM.choose_ivf_cells(_IVF_ORACLE_N))
           AS rank
       FROM scored)
     WHERE rank <= 5 ORDER BY qid, rank""",
-)
+    order=("qid", "rank"))
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k (round brief 'IVF or LSH-bucketed
     variant as the scale path'): coarse-quantize to nearest unit centroid,
@@ -3139,8 +3111,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                        n_cells=SIM.choose_ivf_cells(_IVF_ORACLE_N),
                        nprobe=1)
     return out.select("qid", "vec_id", "cosine",
-                      F.col("rank").cast("int").alias("rank")) \
-              .repartition(1).sortWithinPartitions("qid", "rank")
+                      F.col("rank").cast("int").alias("rank"))
 
 
 # ----------------------------------------------- A12 coref / A10 natlog
@@ -3169,7 +3140,7 @@ _COREF_DOC_CTE = ("WITH cdoc AS (SELECT doc_id, " + _COREF_TEXT
            CAST(tok_end AS BIGINT) AS head_index,
            CAST(chain_size AS BIGINT) AS chain_size
     FROM cm ORDER BY doc_id, chain_id, sent_index, token_beg""",
-)
+    order=("doc_id", "chain_id", "sent_index", "token_beg"))
 def q_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 coref chains (reference stanford.clj:407-421 coref-tree-to-map,
     config.clj:200-204): mentions clustered across sentences by exact
@@ -3179,9 +3150,7 @@ def q_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread_small_input (coref.coref_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
-    return (CRF.coref_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "chain_id", "sent_index", "token_beg"))
+    return CRF.coref_rows(docs)
 
 
 @register(
@@ -3197,7 +3166,7 @@ def q_coref_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
       CASE WHEN coalesce(n_chains, 0) = 0 THEN 0.0
            ELSE CAST(nm AS DOUBLE) / n_chains END AS mean_chain_size
     FROM documents d LEFT JOIN cagg USING (doc_id) ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_coref_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 feature consumer: per-doc chain count/size stats from the
     coref column (the chain-count/size features a reference pipeline
@@ -3206,8 +3175,7 @@ def q_coref_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread_small_input (coref.coref_doc_features)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_COREF_TEXT).alias("text"))
-    return (CRF.coref_doc_features(docs)
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return CRF.coref_doc_features(docs)
 
 
 _NATLOG_DOC_CTE = ("WITH ndoc AS (SELECT doc_id, " + _NATLOG_TEXT
@@ -3218,7 +3186,7 @@ _NATLOG_DOC_CTE = ("WITH ndoc AS (SELECT doc_id, " + _NATLOG_TEXT
     "natlog_tokens",
     _NATLOG_DOC_CTE + NLG.duck_natlog_cte("ndoc") + """
     SELECT * FROM nl ORDER BY doc_id, sent_index, token_index""",
-)
+    order=("doc_id", "sent_index", "token_index"))
 def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 natlog (reference stanford.clj:434-452 anon-operator-map /
     anon-token-map, config.clj:179-187): per-token {operator, polarity}
@@ -3228,9 +3196,7 @@ def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind spread_small_input (natlog.natlog_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
-    return (NLG.natlog_rows(docs)
-            .repartition(1).sortWithinPartitions(
-                "doc_id", "sent_index", "token_index"))
+    return NLG.natlog_rows(docs)
 
 
 @register(
@@ -3247,7 +3213,7 @@ def q_natlog_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
       CASE WHEN coalesce(n_tokens, 0) = 0 THEN 0.0
            ELSE CAST(n_down AS DOUBLE) / n_tokens END AS down_ratio
     FROM documents d LEFT JOIN nagg USING (doc_id) ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_natlog_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 feature consumer: per-doc operator/polarity stats over the
     natlog token rule. Zero-default rows for empty docs; one declared
@@ -3255,8 +3221,7 @@ def q_natlog_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (natlog.natlog_doc_features)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_NATLOG_TEXT).alias("text"))
-    return (NLG.natlog_doc_features(docs)
-            .repartition(1).sortWithinPartitions("doc_id"))
+    return NLG.natlog_doc_features(docs)
 
 
 # ------------------------------------------------- A13 srl struct (flat)
@@ -3285,7 +3250,7 @@ from clj_nlp_parse_spark.operators import trees as TR2
            {SRL.propbank_sql('words', 'tg', 'e.dependent')}
              AS propbank
     FROM ed ORDER BY doc_id, id""",
-)
+    order=("doc_id", "id"))
 def q_srl_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 srl struct shape, flattened (reference srl.clj:143-162
     mapify-parsed-sentences): one row per token with id / head-id /
@@ -3297,8 +3262,7 @@ def q_srl_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (srl.srl_token_rows)."""
     docs = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_CHUNK_TEXT).alias("text"))
-    return (SRL.srl_token_rows(docs)
-            .repartition(1).sortWithinPartitions("doc_id", "id"))
+    return SRL.srl_token_rows(docs)
 
 
 # ----------------------------- banded cosine near-dup (dedup scale path)
@@ -3333,7 +3297,7 @@ _CB_DUCK_BK = " UNION ALL ".join(
       JOIN e eb ON eb.vec_id = id_b)
     WHERE cosine >= 0.99
     ORDER BY id_a, id_b""",
-)
+    order=("id_a", "id_b"))
 def q_cosine_dedup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded (OR-amplified) embedding-cosine near-dup pairs — the scale
     path of cosine_dedup_pairs: n_bands independent hyperplane tables,
@@ -3346,10 +3310,9 @@ def q_cosine_dedup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select((F.col("vec_id") + 1000000).alias("vec_id"),
                     "embedding"))
     e = emb.select("vec_id", "embedding").unionByName(dups)
-    out = SIM.cosine_dedup_pairs_banded(
+    return SIM.cosine_dedup_pairs_banded(
         e, threshold=0.99, dim=64, n_bands=_CB_BANDS,
         planes_per_band=_CB_R)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
 
 
 #: the DERIVED-path pins (VERDICT_r04 #4): the production entry point
@@ -3389,7 +3352,7 @@ _CBD_DUCK_BK = " UNION ALL ".join(
       JOIN e eb ON eb.vec_id = id_b)
     WHERE cosine >= 0.99
     ORDER BY id_a, id_b""",
-)
+    order=("id_a", "id_b"))
 def q_cosine_dedup_banded_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cosine_dedup_banded through the PRODUCTION parameter path
     (VERDICT_r04 #4): r and b are NOT passed — cosine_dedup_pairs_banded
@@ -3406,8 +3369,7 @@ def q_cosine_dedup_banded_derived(spark: SparkSession, sf_dir: str) -> DataFrame
             .select((F.col("vec_id") + 1000000).alias("vec_id"),
                     "embedding"))
     e = emb.select("vec_id", "embedding").unionByName(dups)
-    out = SIM.cosine_dedup_pairs_banded(e, threshold=0.99, dim=64)
-    return out.repartition(1).sortWithinPartitions("id_a", "id_b")
+    return SIM.cosine_dedup_pairs_banded(e, threshold=0.99, dim=64)
 
 
 _TBS_TOKS = dialect.tokens_expr("text", "duck")
@@ -3430,7 +3392,7 @@ _TBS_BPE = TS.token_counts_sql("t", "ws", "duck")["n_bpe_tokens"]
     SELECT doc_id, lang, quality,
            CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens
     FROM o, tot WHERE cum <= b ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget selection — admit the highest-quality docs until 60%
     of the corpus's BPE tokens are filled. The ORACLE is the plain spec
@@ -3445,8 +3407,7 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = CU.token_budget_select(_docs(spark, sf_dir))
     return (out.select("doc_id", "lang", "quality",
                        F.col("n_bpe_tokens").cast("long")
-                       .alias("n_bpe_tokens"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+                       .alias("n_bpe_tokens")))
 
 
 @register(
@@ -3474,7 +3435,7 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens
     FROM o JOIN b ON o.lang IS NOT DISTINCT FROM b.lang
     WHERE cum <= bl ORDER BY doc_id""",
-)
+    order=("doc_id",))
 def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-weighted per-stratum TOKEN budgets (the data-mix op in
     the units training actually budgets): the 60% global token budget is
@@ -3490,5 +3451,4 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = CU.token_budget_mix(_docs(spark, sf_dir))
     return (out.select("doc_id", "lang", "quality",
                        F.col("n_bpe_tokens").cast("long")
-                       .alias("n_bpe_tokens"))
-            .repartition(1).sortWithinPartitions("doc_id"))
+                       .alias("n_bpe_tokens")))

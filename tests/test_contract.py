@@ -9,7 +9,7 @@ def test_registry_consistency():
     from clj_nlp_parse_spark import queries as Q
     import __spark_entry__ as E
 
-    assert set(Q.ORACLES) <= set(Q.QUERIES)
+    assert set(Q.ORACLES) == set(Q.QUERIES)
     # every bench headline query exists
     assert set(bench.HEADLINE) <= set(Q.QUERIES)
     # entry module exposes exactly the registry
