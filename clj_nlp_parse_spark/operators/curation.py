@@ -169,6 +169,27 @@ def curation_decide_py(train: list[tuple], ev: list[tuple],
     return out
 
 
+def _budget_scored(tr: DataFrame, id_col: str, lang_col: str,
+                   text_col: str) -> DataFrame:
+    """The checkpointed (id, lang, quality, n_bpe_tokens) frame both token
+    budgets decide over. Several subtrees read it (histogram, admission
+    join, and token_budget_mix's per-stratum budgets), and each would
+    otherwise re-evaluate the tokenize+score expressions over the full
+    corpus; the checkpoint is O(corpus rows) of 4 narrow columns (measured
+    1.7 → 0.7 s for token_budget_select at sf0.1; a pure materialization,
+    the same rows bit-for-bit)."""
+    t = F.expr(f"coalesce({text_col}, '')").alias("__t")
+    return (tr.select(F.col(id_col), F.col(lang_col), t,
+                      F.expr(dialect.tokens_expr(text_col, "spark"))
+                      .alias("__ws"))
+            .select(id_col, lang_col,
+                    F.expr(TS.quality_score_sql("__t", "__ws", "spark"))
+                    .alias("quality"),
+                    F.expr(TS.token_counts_sql("__t", "__ws", "spark")
+                           ["n_bpe_tokens"]).alias("n_bpe_tokens"))
+            .localCheckpoint())
+
+
 def token_budget_select(tr: DataFrame, budget_num: int = 6,
                         budget_den: int = 10, id_col: str = "doc_id",
                         lang_col: str = "lang", text_col: str = "text",
@@ -200,25 +221,11 @@ def token_budget_select(tr: DataFrame, budget_num: int = 6,
     Integer token arithmetic throughout (budget = (total*num) div den)
     keeps the decision bit-exact across engines.
 
-    Cost note (r6): the histogram subtree and the join subtree both read
-    the scored frame, so the heavy quality/token expressions are
-    localCheckpoint()ed ONCE as the narrow (id, lang, quality, tokens)
-    projection instead of being re-evaluated per subtree — this IS the
-    documented production shape ("a run that already materializes per-doc
-    quality/token columns pays one scan of those"), done in-plan. The
-    checkpoint is O(corpus rows) of 4 narrow columns — far smaller than
-    re-tokenizing the text column per subtree (measured 1.7 → 0.7 s at
-    sf0.1; same rows bit-for-bit, it is a pure materialization)."""
-    t = F.expr(f"coalesce({text_col}, '')").alias("__t")
-    s = (tr.select(F.col(id_col), F.col(lang_col), t,
-                   F.expr(dialect.tokens_expr(text_col, "spark"))
-                   .alias("__ws"))
-         .select(id_col, lang_col,
-                 F.expr(TS.quality_score_sql("__t", "__ws", "spark"))
-                 .alias("quality"),
-                 F.expr(TS.token_counts_sql("__t", "__ws", "spark")
-                        ["n_bpe_tokens"]).alias("n_bpe_tokens"))
-         .localCheckpoint())
+    Cost note (r6): the scored frame is _budget_scored's checkpoint, read
+    by the histogram and the join subtrees — this IS the documented
+    production shape ("a run that already materializes per-doc
+    quality/token columns pays one scan of those"), done in-plan."""
+    s = _budget_scored(tr, id_col, lang_col, text_col)
     return select_from_scored(s, budget_num, budget_den,
                               id_col=id_col, lang_col=lang_col, bins=bins)
 
@@ -309,23 +316,11 @@ def token_budget_mix(tr: DataFrame, budget_num: int = 6,
     quality distribution. NULL lang is its own stratum everywhere
     (eqNullSafe / IS NOT DISTINCT FROM, the corpus_profile precedent).
 
-    r6: the scored projection is localCheckpoint()ed once — THREE
-    subtrees read it (per-stratum budgets, the histogram, and the
-    admission join), and each would otherwise re-evaluate the
-    tokenize+score expressions over the full corpus (same rationale and
-    measurement as token_budget_select)."""
-    t = F.expr(f"coalesce({text_col}, '')").alias("__t")
-    s = (tr.select(F.col(id_col), F.col(lang_col), t,
-                   F.expr(dialect.tokens_expr(text_col, "spark"))
-                   .alias("__ws"))
-         .select(id_col, lang_col,
-                 F.expr(TS.quality_score_sql("__t", "__ws", "spark"))
-                 .alias("quality"),
-                 F.expr(TS.token_counts_sql("__t", "__ws", "spark")
-                        ["n_bpe_tokens"]).alias("n_bpe_tokens"))
-         .withColumn("__bin",
-                     F.expr(f"cast(floor(quality * {bins}) as int)"))
-         .localCheckpoint())
+    The scored frame is _budget_scored's checkpoint, read by THREE
+    subtrees (per-stratum budgets, the histogram, and the admission
+    join); `__bin` is a cheap projection over it."""
+    s = _budget_scored(tr, id_col, lang_col, text_col).withColumn(
+        "__bin", F.expr(f"cast(floor(quality * {bins}) as int)"))
     wall = Window.partitionBy()
     budgets = (s.groupBy(lang_col)
                .agg(F.sum("n_bpe_tokens").alias("__tl"))

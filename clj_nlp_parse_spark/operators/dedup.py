@@ -86,22 +86,14 @@ def shingle_hashes_sql(shingles: str, d: str) -> str:
     return f"list_transform({shingles}, s -> {h})"
 
 
-def minhash_sig_sql(hs: str, d: str) -> list[str]:
-    """K SQL expressions over precomputed shingle hashes `hs` (NULL-safe:
-    empty shingle set → MINHASH_MOD sentinel)."""
-    out = []
-    for i in range(MINHASH_K):
-        a, b = MINHASH_A[i], MINHASH_B[i]
-        if d == "spark":
-            expr = (f"coalesce(array_min(transform({hs}, "
-                    f"h -> ({a}L * h + {b}L) % {MINHASH_MOD}L)), "
-                    f"{MINHASH_MOD}L)")
-        else:
-            expr = (f"coalesce(list_min(list_transform({hs}, "
-                    f"h -> ({a}::BIGINT * h + {b}::BIGINT) % {MINHASH_MOD})), "
-                    f"{MINHASH_MOD}::BIGINT)")
-        out.append(expr)
-    return out
+def minhash_sig_sql(hs: str) -> list[str]:
+    """DuckDB: K expressions over precomputed shingle hashes `hs`
+    (NULL-safe: empty shingle set → MINHASH_MOD sentinel). The Spark side
+    computes the same signatures in the _minhash_arrow_fn kernel."""
+    return [f"coalesce(list_min(list_transform({hs}, "
+            f"h -> ({a}::BIGINT * h + {b}::BIGINT) % {MINHASH_MOD})), "
+            f"{MINHASH_MOD}::BIGINT)"
+            for a, b in zip(MINHASH_A, MINHASH_B)]
 
 
 def band_hash_sql(sig_cols: list[str], band: int, d: str) -> str:
@@ -125,20 +117,16 @@ def word_hashes_sql(words: str, d: str) -> str:
     return f"list_transform({words}, w -> {h})"
 
 
-def simhash_sql(hs: str, bits: int, d: str) -> str:
-    """SimHash over precomputed word hashes `hs`: bit k set iff
-    Σ_occurrences (±1) > 0 where sign is bit k of the word's h31."""
+def simhash_sql(hs: str, bits: int) -> str:
+    """DuckDB SimHash over precomputed word hashes `hs`: bit k set iff
+    Σ_occurrences (±1) > 0 where sign is bit k of the word's h31. The
+    Spark side computes the same hash in the _simhash_arrow_fn kernel."""
     terms = []
     for k in range(bits):
-        if d == "spark":
-            bit = f"(CASE WHEN ((x) div {1 << k}) % 2 = 1 THEN 1 ELSE -1 END)"
-            s = f"aggregate({hs}, 0, (a, x) -> a + {bit})"
-            terms.append(f"(CASE WHEN ({s}) > 0 THEN {1 << k}L ELSE 0L END)")
-        else:
-            bit = f"(CASE WHEN ((x) // {1 << k}) % 2 = 1 THEN 1 ELSE -1 END)"
-            s = f"coalesce(list_sum(list_transform({hs}, x -> {bit})), 0)"
-            terms.append(
-                f"(CASE WHEN ({s}) > 0 THEN {1 << k}::BIGINT ELSE 0::BIGINT END)")
+        bit = f"(CASE WHEN ((x) // {1 << k}) % 2 = 1 THEN 1 ELSE -1 END)"
+        s = f"coalesce(list_sum(list_transform({hs}, x -> {bit})), 0)"
+        terms.append(
+            f"(CASE WHEN ({s}) > 0 THEN {1 << k}::BIGINT ELSE 0::BIGINT END)")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -466,10 +454,14 @@ def phash_near_dup_pairs(df: DataFrame, max_hamming: int = 2,
         .select("id_a", "id_b", "hamming"))
 
 
-#: edge-count ceiling for the driver-side union-find fast path: 2M RAW
-#: (u, v) bigint pair rows ≈ 32 MB collected — the same order as a
-#: broadcast relation, well inside any driver. Above it the distributed
-#: min-label loop runs unchanged.
+#: edge-count ceiling for the driver-side union-find fast path, in RAW
+#: (u, v) bigint pair rows; above it the distributed min-label loop runs
+#: unchanged. 2M rows are ~32 MB of collected payload, but the driver's
+#: Python holds far more at the cap: the collected Row objects, the
+#: union-find dicts and the pandas result peak at 1,387 MiB (tracemalloc,
+#: CPython 3.11, pandas 2.2) for 2M disjoint pairs (4M nodes, the most a
+#: 2M-edge list can touch) and 811 MiB for 2M random edges over 1M ids
+#: (~0.98M nodes touched).
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
@@ -523,14 +515,10 @@ def _cc_driver_side(edges: DataFrame, limit: int) -> DataFrame | None:
     # r6: a pandas-backed createDataFrame becomes a JVM LocalRelation
     # (LocalTableScan) with KNOWN small stats — downstream keep_list
     # joins broadcast it and skip both exchanges, and execution never
-    # re-serializes the rows through a Python worker the way the
-    # plain-list path's ExistingRDD does (measured 0.40 → 0.19 s per
-    # keep_list execution at 500 components). Only a missing pandas falls
-    # back to the list path; a conversion error propagates.
-    try:
-        import pandas as pd
-    except ImportError:
-        return spark.createDataFrame(out, schema)
+    # re-serializes the rows through a Python worker the way a plain-list
+    # createDataFrame's ExistingRDD does (measured 0.40 → 0.19 s per
+    # keep_list execution at 500 components).
+    import pandas as pd
     return spark.createDataFrame(
         pd.DataFrame(out, columns=["node", "component"]), schema)
 
@@ -675,6 +663,31 @@ def collapse_exact(df: DataFrame, id_col: str, key) -> tuple:
     return reps, star
 
 
+def near_dup_groups(df: DataFrame, id_col: str, key, pairs_of,
+                    prepare=lambda reps: reps) -> DataFrame:
+    """The one dedup-groups decision behind every modality (text
+    dedup_groups, image_dedup_groups, embedding_dedup_groups): rows
+    sharing an identical `key` collapse to their min-id representative
+    (collapse_exact), `pairs_of` finds the near-duplicate pairs among the
+    representatives, the pairs plus the collapse's star edges feed
+    connected components, and keep_list decides one canonical row per
+    cluster. Returns (id_col, component, keep) for every row of `df`.
+
+    `prepare` projects the representatives into what `pairs_of` reads
+    (text: the shingle projection). Its result is localCheckpoint()ed
+    once: every pair pipeline reads it from several branches (self-join
+    sides, verify sides, the prefix df window), so the collapse window and
+    the projection run once instead of once per branch. `pairs_of` returns
+    a frame whose first two columns are the pair's ids."""
+    reps, star = collapse_exact(df, id_col, key)
+    pairs = pairs_of(prepare(reps).localCheckpoint())
+    a, b = pairs.columns[:2]
+    edges = (pairs.select(F.col(a).alias("doc_a"), F.col(b).alias("doc_b"))
+             .unionByName(star))
+    comp = connected_components(edges, "doc_a", "doc_b")
+    return keep_list(df.select(id_col), comp, id_col)
+
+
 def dedup_groups(df: DataFrame, threshold: float = 0.5,
                  id_col: str = "doc_id", text_col: str = "text",
                  n: int = 3) -> DataFrame:
@@ -689,33 +702,28 @@ def dedup_groups(df: DataFrame, threshold: float = 0.5,
     (a~b, b~c must drop BOTH b and c).
 
     Identical texts are collapsed to one representative BEFORE pair
-    enumeration (collapse_exact) — only docs with at least one shingle are
-    eligible (shingle-less docs can never pair under the Jaccard path, so
-    collapsing two identical empty docs would WRONGLY group them; they get
-    a per-row unique key instead and stay singletons)."""
+    enumeration (near_dup_groups) — only docs with at least one shingle
+    are eligible (shingle-less docs can never pair under the Jaccard path,
+    so collapsing two identical empty docs would WRONGLY group them; they
+    get a per-row unique key instead and stay singletons)."""
     n_toks = F.expr(f"size({dialect.tokens_expr(text_col, 'spark')})")
     # md5 is hex, so the "!"-prefixed per-row fallback key never collides
     key = F.when(n_toks >= n,
                  F.md5(F.expr(norm_text_sql(text_col, "spark")))) \
         .otherwise(F.concat(F.lit("!"), F.col(id_col).cast("string")))
-    reps, star = collapse_exact(df.select(id_col, text_col), id_col, key)
-    # the prefix-pair pipeline reads reps from several branches (df window,
-    # both prefix sides, both verify sides) — checkpoint the collapse
-    # window WITH the shingle projection already applied (r6), so both the
-    # window and the tokenize+shingle expression are computed once instead
-    # of once per branch (same localCheckpoint hygiene as the CC loop)
-    shingled = with_shingles(reps, id_col, text_col, n).localCheckpoint()
-    pairs = prefix_pairs_from_shingles(shingled, threshold, id_col)
-    edges = pairs.select("doc_a", "doc_b").unionByName(star)
-    comp = connected_components(edges, "doc_a", "doc_b")
-    return keep_list(df.select(F.col(id_col)), comp, id_col)
+    return near_dup_groups(
+        df.select(id_col, text_col), id_col, key,
+        lambda shingled: prefix_pairs_from_shingles(shingled, threshold,
+                                                    id_col),
+        prepare=lambda reps: with_shingles(reps, id_col, text_col, n))
 
 
 def keep_list(ids: DataFrame, components: DataFrame,
               id_col: str) -> DataFrame:
     """Canonical keep-list semantics shared by every dedup-groups surface
-    (text, image): left-join ids to their component, singletons are their
-    own component, keep = the smallest member of each cluster."""
+    (text, image, embedding; see near_dup_groups): left-join ids to their
+    component, singletons are their own component, keep = the smallest
+    member of each cluster."""
     return (ids
             .join(components.withColumnRenamed("node", id_col),
                   id_col, "left")

@@ -125,14 +125,6 @@ def extract_image_features(df: DataFrame, buckets: int = 64,
     return df.select(*cols).mapInPandas(run, schema=IMAGE_FEATURES_FIELDS)
 
 
-def salted(df: DataFrame, key: str, salts: int, salt_col: str = "__salt",
-           id_col: str = "image_id") -> DataFrame:
-    """Skew kill for hot keys (SURVEY.md §4.3.2): deterministic salt from a
-    row id so hot buckets split across `salts` shuffle partitions."""
-    return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(F.col(id_col)), F.lit(salts)))
-
-
 def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Deterministic nearest-neighbor resize (library-free)."""
     h, w = arr.shape[:2]

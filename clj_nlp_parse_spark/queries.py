@@ -851,7 +851,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.exact_dedup(_docs(spark, sf_dir))
 
 
-_MH_DUCK = DD.minhash_sig_sql("hs", "duck")
+_MH_DUCK = DD.minhash_sig_sql("hs")
 _MH_SIG_CTE = (_WD_CTE + f", sh AS (SELECT doc_id, "
                f"{DD.word_shingles_sql('words', 3, 'duck')} AS shingles "
                f"FROM wd), hh AS (SELECT doc_id, "
@@ -892,7 +892,7 @@ def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _WD_CTE + f"""
     , hh AS (SELECT doc_id, {DD.word_hashes_sql('words', 'duck')} AS hs
              FROM wd)
-    SELECT doc_id, {DD.simhash_sql('hs', 32, 'duck')} AS simhash
+    SELECT doc_id, {DD.simhash_sql('hs', 32)} AS simhash
     FROM hh ORDER BY doc_id""",
     order=("doc_id",))
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,22 +1122,15 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming-1 duplicates MUST collapse onto their originals.
 
     Equal-phash images collapse to one representative before the banded
-    pair join (collapse_exact, VERDICT_r02 #3): a 10^6-copy boilerplate
+    pair join (near_dup_groups, VERDICT_r02 #3): a 10^6-copy boilerplate
     image yields 10^6-1 star edges instead of ~5*10^11 pairs; the CC
     closure is identical because hamming(x, x)=0 always pairs and the rep
     inherits every cross-group band match."""
-    allv = _phash_corpus(spark, sf_dir)
-    reps, star = DD.collapse_exact(allv, "doc_id", F.col("ph"))
-    # banded pair join reads reps twice (both self-join sides): checkpoint
-    # so the collapse window runs once
-    reps = reps.localCheckpoint()
-    pairs = DD.phash_near_dup_pairs(reps, max_hamming=2, phash_col="ph")
-    edges = (pairs.select(F.col("id_a").alias("doc_a"),
-                          F.col("id_b").alias("doc_b"))
-             .unionByName(star))
-    comp = DD.connected_components(edges, "doc_a", "doc_b")
-    return DD.keep_list(
-        allv.select(F.col("doc_id").alias("image_id")), comp, "image_id")
+    groups = DD.near_dup_groups(
+        _phash_corpus(spark, sf_dir), "doc_id", F.col("ph"),
+        lambda reps: DD.phash_near_dup_pairs(reps, max_hamming=2,
+                                             phash_col="ph"))
+    return groups.withColumnRenamed("doc_id", "image_id")
 
 
 @register(
@@ -2633,9 +2626,10 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign-bucket candidate pairs verified at cosine >= 0.99 → connected
     components → one canonical vector kept per near-duplicate cluster.
 
-    Same identical-content blowup guard as the other two (collapse_exact):
-    byte-identical embeddings collapse to a representative before the
-    bucket self-join (m copies cost m-1 star edges, not m²/2 pairs);
+    Same near_dup_groups core as the other two, so the same
+    identical-content blowup guard: byte-identical embeddings collapse to
+    a representative before the bucket self-join (m copies cost m-1 star
+    edges, not m²/2 pairs);
     zero-norm vectors get a per-row key and stay singletons (cosine
     against a zero vector is defined as 0 here, so they can never pair)."""
     emb = _emb(spark, sf_dir)
@@ -2647,15 +2641,10 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"({SIM.norm_sql('embedding', 'spark')}) > 0"),
         F.md5(F.col("embedding").cast("string"))) \
         .otherwise(F.concat(F.lit("!"), F.col("vec_id").cast("string")))
-    reps, star = DD.collapse_exact(e, "vec_id", key)
-    # bucket self-join reads reps twice: checkpoint the collapse window
-    reps = reps.localCheckpoint()
-    pairs = SIM.cosine_dedup_pairs(reps, threshold=0.99, dim=64, n_planes=6)
-    edges = (pairs.select(F.col("id_a").alias("doc_a"),
-                          F.col("id_b").alias("doc_b"))
-             .unionByName(star))
-    comp = DD.connected_components(edges, "doc_a", "doc_b")
-    return DD.keep_list(e.select("vec_id"), comp, "vec_id")
+    return DD.near_dup_groups(
+        e, "vec_id", key,
+        lambda reps: SIM.cosine_dedup_pairs(reps, threshold=0.99, dim=64,
+                                            n_planes=6))
 
 
 @register(

@@ -167,24 +167,6 @@ def read_images_table(spark: SparkSession, location: str,
     return spark.read.schema(IMAGES_SCHEMA).parquet(location)
 
 
-def current_snapshot_id(spark: SparkSession, table: str) -> str:
-    """Snapshot identity for lineage manifests: Iceberg snapshot id when
-    available, else a fingerprint of the parquet file listing."""
-    try:
-        return str(spark.sql(
-            f"SELECT snapshot_id FROM {table}.snapshots "
-            f"ORDER BY committed_at DESC LIMIT 1").collect()[0][0])
-    except Exception:
-        import hashlib
-        import os
-        if os.path.isdir(table):
-            names = sorted(
-                f"{f}:{os.path.getsize(os.path.join(table, f))}"
-                for f in os.listdir(table) if not f.startswith("_"))
-            return hashlib.md5("|".join(names).encode()).hexdigest()[:16]
-        raise
-
-
 def write_feature_table(df: "DataFrame", path: str,
                         entity_col: str = "entity_id",
                         ts_col: str = "event_ts",

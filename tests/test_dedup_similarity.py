@@ -331,6 +331,34 @@ def test_dedup_groups_identical_empty_docs_stay_singletons(spark):
     assert got == {1: (1, True), 2: (2, True), 3: (3, True)}
 
 
+def test_embedding_dedup_groups_keep_semantics(spark, tmp_path):
+    # the embedding surface of near_dup_groups, run through the registered
+    # query body on a small embeddings table: byte-identical vectors share
+    # a component (the query's own +1000000 copy of ids < 50 and an
+    # explicit copy), zero-norm vectors never pair, and a cosine >= 0.99
+    # pair of distinct vectors groups
+    from clj_nlp_parse_spark import queries as Q
+    from clj_nlp_parse_spark import schema
+    rng = np.random.default_rng(5)
+    v1, v2, v3 = (rng.standard_normal(64).astype(np.float32)
+                  for _ in range(3))
+    v2b = (v2 + 0.01 * rng.standard_normal(64)).astype(np.float32)
+    cos = float(v2 @ v2b) / float(np.linalg.norm(v2) * np.linalg.norm(v2b))
+    assert 0.99 <= cos < 1.0
+    zero = np.zeros(64, dtype=np.float32)
+    rows = [(1, v1), (60, v1), (70, zero), (71, zero), (80, v2), (81, v2b),
+            (90, v3)]
+    spark.createDataFrame(
+        [(i, v.tolist(), 0) for i, v in rows], schema.EMBEDDINGS_SCHEMA) \
+        .write.parquet(str(tmp_path / "embeddings.parquet"))
+    got = {r.vec_id: (r.component, r.keep)
+           for r in Q.q_embedding_dedup_groups(
+               spark, str(tmp_path)).collect()}
+    assert got == {1: (1, True), 60: (1, False), 1_000_001: (1, False),
+                   70: (70, True), 71: (71, True),
+                   80: (80, True), 81: (80, False), 90: (90, True)}
+
+
 def test_decontaminate_flags_ngram_overlap(spark):
     from clj_nlp_parse_spark.operators import dedup as DD
     ev = spark.createDataFrame(

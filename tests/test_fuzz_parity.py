@@ -782,8 +782,8 @@ def test_windowed_ops_python_twin(spark):
 def test_phash_dedup_python_twin(spark):
     """phash_pairs_py / image_dedup_groups_py are the quadratic
     mathematical definition of perceptual-hash near-dup over 64-bit
-    two's-complement hamming — the banded operator (+ collapse_exact +
-    CC, the image_dedup_groups pipeline shape) must reproduce them
+    two's-complement hamming — the banded operator, and near_dup_groups
+    over it (the image_dedup_groups pipeline), must reproduce them
     exactly on random signed 64-bit hashes with injected 1/2-bit flips,
     byte-identical hashes, high-bit-only differences (above the banded
     region), and the (1<<62)+1 Arrow-exactness regression value."""
@@ -818,14 +818,11 @@ def test_phash_dedup_python_twin(spark):
                    bits=bits, bands=bands).collect()}
         assert got == D.phash_pairs_py(rows, 2), (bits, bands)
 
-    reps, star = D.collapse_exact(sdf, "doc_id", F.col("ph"))
-    pairs = D.phash_near_dup_pairs(reps, max_hamming=2, phash_col="ph")
-    edges = (pairs.selectExpr("id_a as doc_a", "id_b as doc_b")
-             .unionByName(star))
-    comp = D.connected_components(edges)
-    got_g = {r.doc_id: (r.component, r.keep)
-             for r in D.keep_list(
-                 sdf.select("doc_id"), comp, "doc_id").collect()}
+    groups = D.near_dup_groups(
+        sdf, "doc_id", F.col("ph"),
+        lambda reps: D.phash_near_dup_pairs(reps, max_hamming=2,
+                                            phash_col="ph"))
+    got_g = {r.doc_id: (r.component, r.keep) for r in groups.collect()}
     want_g = D.image_dedup_groups_py(rows)
     assert got_g == want_g
     # non-vacuous: identical hashes grouped, 1-bit flips grouped,
