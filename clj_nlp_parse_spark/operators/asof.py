@@ -1,28 +1,40 @@
 """Point-in-time (as-of) join — the north_rule centerpiece.
 
 No reference analog (the reference is a single-document batch engine); this
-is the graft mandated by BASELINE.json: join each entity's event rows to the
-latest feature row with feature_ts <= event_ts (backward, inclusive), with
-zero temporal leakage, at 10^12-row scale.
+is the graft mandated by BASELINE.json: join each entity's event rows to
+one feature row of the same key — backward (the latest feature_ts <=
+event_ts, inclusive: the point-in-time default), forward (the earliest
+feature_ts >= event_ts, inclusive: label joins) or nearest (the closer of
+the two) — with zero temporal leakage for backward, at 10^12-row scale.
 
-Two strategies, same semantics:
+Three strategies, same semantics:
 
-1. union_window (default) — pure Catalyst: tag both sides, union, one
-   window `last(value, ignorenulls) over (partition by key order by ts,
-   is_left)` forward-carries the latest feature onto each event row.
-   One shuffle on the join key, whole-stage codegen, AQE-coalesced;
-   no Python crossing at all. Survives 100× scale because it is exactly
-   a sort-merge join's shuffle+sort with an O(1) carry instead of a
-   probe — no row explosion on hot keys.
+1. union_window (default; all three directions) — pure Catalyst: tag both
+   sides, union, one window `over (partition by key order by ts, side)`
+   carries the matched feature onto each event row (`last(ignorenulls)`
+   backward, `first(ignorenulls)` forward, both for nearest). One shuffle
+   on the join key, whole-stage codegen, AQE-coalesced; no Python
+   crossing at all. Survives 100× scale because it is exactly a
+   sort-merge join's shuffle+sort with an O(1) carry instead of a probe —
+   no row explosion on hot keys.
 
-2. merge_asof — range-bucketed sort-merge via applyInPandas(pd.merge_asof)
-   per co-partitioned key group (the shape the north_rule names). Arrow
-   batches, vectorized inside pandas; used when per-group custom logic
-   (tolerance, nearest) is needed.
+2. merge_asof (all three directions) — range-bucketed sort-merge via
+   applyInPandas(pd.merge_asof) per co-partitioned key group (the shape
+   the north_rule names). Arrow batches, vectorized inside pandas.
+
+3. union_window_split (backward) — the hot-key skew killer: every key's
+   timeline is cut into time buckets, each bucket is seeded with the
+   latest feature of any earlier bucket, and the union_window carry runs
+   per (key, bucket). strategy='auto' picks it past the measured hot-key
+   crossover.
+
+`_asof_union_window` is the only place the tag/union/window carry is
+built; union_window and union_window_split both run through it.
 
 Leakage guard: `audit_leakage` anti-checks feature_ts <= event_ts on the
-output — structurally impossible to fail for strategy 1 (the carry only
-ever looks backward), but the audit is part of the output contract.
+output — structurally impossible to fail for backward union_window and
+its split (the carry only ever looks backward, ordered on the full
+timestamp), but the audit is part of the output contract.
 """
 
 from __future__ import annotations
@@ -46,13 +58,22 @@ def asof_join(
 ) -> DataFrame:
     """As-of join: for each left row, attach the right row's values at the
     greatest right_ts <= left_ts (direction='backward', inclusive — the
-    point-in-time default) or the smallest right_ts >= left_ts
-    (direction='forward', inclusive — e.g. label joins) within `on` keys.
+    point-in-time default), the smallest right_ts >= left_ts
+    (direction='forward', inclusive — e.g. label joins) or the closer of
+    the two (direction='nearest'; equidistant → backward) within `on` keys.
 
     tolerance_ms: if set, matches farther than this from the event are
     nulled out. Equivalent to matching 'latest/earliest within tolerance':
     any other candidate is strictly farther, so post-match filtering is
     exact (the pd.merge_asof tolerance contract).
+
+    Millisecond distances: nearest's tie-break and tolerance_ms compare
+    whole milliseconds (`unix_millis` of both timestamps), as the frozen
+    DuckDB oracles' `epoch_ms` do; the match itself orders on the full
+    timestamp. So a feature at 10.0 ms passes a 1000 ms tolerance for an
+    event at 1010.8 ms (1000.8 ms later), and an event at 10.9 ms takes
+    the feature at 10.3 ms (0.6 ms before) over the one at 11.3 ms (0.4 ms
+    after): truncated, they are 0 and 1 ms away.
 
     Output: all left columns + matched right_ts (named after right_ts,
     NULL when no match) + value_cols (NULL when no match).
@@ -70,10 +91,7 @@ def asof_join(
         strategy = choose_asof_strategy(left, on, right)
         if direction != "backward":
             strategy = "union_window"
-    if strategy == "union_window" and direction == "nearest":
-        out = _asof_union_window_nearest(left, right, on, left_ts,
-                                         right_ts, value_cols)
-    elif strategy == "union_window":
+    if strategy == "union_window":
         out = _asof_union_window(left, right, on, left_ts, right_ts,
                                  value_cols, direction)
     elif strategy == "merge_asof":
@@ -153,24 +171,37 @@ def _pack_type(right, right_ts, value_cols):
 
 
 def _asof_union_window(left, right, on, left_ts, right_ts, value_cols,
-                       direction: str = "backward"):
-    left_cols = left.columns
+                       direction: str = "backward", part: Sequence[str] = ()):
+    """The one tag/union/window carry: every union_window direction and the
+    split's per-bucket stage run through it.
+
+    Both sides are tagged and unioned, then one window partitioned by
+    `on + part` and ordered by (__ts, __side) on the timestamp itself
+    carries the matched feature onto each event row. The side tag gives
+    inclusive matching at equal ts: right rows sort BEFORE left rows for
+    backward and nearest (last() over the preceding frame sees them) and
+    AFTER them for forward (first() over the following frame sees them).
+    Backward carries `last`, forward carries `first`; nearest carries both
+    on the same sort and picks the closer one, tie (equidistant) →
+    backward, the point-in-time-safe side (matches pd.merge_asof's
+    backward preference on ties). One shuffle for every direction.
+
+    `part`: extra partition columns present on both sides (the split's
+    time bucket); they partition the window and are not output.
+
+    NULL-timestamp contract (ADVICE r02): a right row with NULL right_ts
+    can never match (ts comparison with NULL is no-match in merge_asof /
+    ASOF JOIN) — it is filtered before the union, or its non-NULL __pack
+    would be carried as a pseudo-match. A left row with NULL left_ts
+    matches nothing — it sorts NULLS FIRST, so without the guard the
+    forward carry would grab the earliest feature."""
+    part = list(part)
+    left_cols = [c for c in left.columns if c not in part]
     ptype = _pack_type(right, right_ts, value_cols)
-    # NULL-timestamp contract (ADVICE r02): a right row with NULL right_ts
-    # can never match (ts comparison with NULL is no-match in merge_asof /
-    # ASOF JOIN) — filter it before the union, or its non-NULL __pack would
-    # be carried as a pseudo-match. A left row with NULL left_ts matches
-    # nothing — without the guard below it sorts NULLS FIRST and the
-    # forward path's first() over the following frame would grab the
-    # earliest feature.
     right = right.where(F.col(right_ts).isNotNull())
-    # tag ordering gives inclusive matching at equal ts:
-    #   backward: right rows sort BEFORE left rows → last() sees them
-    #   forward:  right rows sort AFTER  left rows → first() over the
-    #             following frame sees them
-    r_side, l_side = (0, 1) if direction == "backward" else (1, 0)
+    r_side, l_side = (1, 0) if direction == "forward" else (0, 1)
     r = right.select(
-        *on,
+        *on, *part,
         F.col(right_ts).alias("__ts"),
         F.lit(r_side).alias("__side"),
         F.struct(F.col(right_ts).alias("rts"),
@@ -179,94 +210,41 @@ def _asof_union_window(left, right, on, left_ts, right_ts, value_cols,
         *[F.lit(None).alias(f"__l_{c}") for c in left_cols],
     )
     l = left.select(
-        *on,
+        *on, *part,
         F.col(left_ts).alias("__ts"),
         F.lit(l_side).alias("__side"),
         F.lit(None).cast(ptype).alias("__pack"),
         *[F.col(c).alias(f"__l_{c}") for c in left_cols],
     )
     u = r.unionByName(l)
-    base = Window.partitionBy(*on).orderBy(F.col("__ts").asc(),
-                                           F.col("__side").asc())
-    if direction == "backward":
-        w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        carried = u.select(
-            "*", F.last("__pack", ignorenulls=True).over(w).alias("__m"))
+    base = Window.partitionBy(*on, *part).orderBy(F.col("__ts").asc(),
+                                                  F.col("__side").asc())
+    back = F.last("__pack", ignorenulls=True).over(
+        base.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    fwd = F.first("__pack", ignorenulls=True).over(
+        base.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    if direction == "nearest":
+        carried = u.select("*", back.alias("__b"), fwd.alias("__f"))
+        ts_ms = F.unix_millis(F.col("__ts").cast("timestamp"))
+        b_ms = F.unix_millis(F.col("__b.rts").cast("timestamp"))
+        f_ms = F.unix_millis(F.col("__f.rts").cast("timestamp"))
+        use_b = (F.col("__f").isNull()
+                 | (F.col("__b").isNotNull()
+                    & ((ts_ms - b_ms) <= (f_ms - ts_ms))))
+        m = F.when(F.col("__ts").isNull(), F.lit(None).cast(ptype)) \
+            .when(use_b, F.col("__b")).otherwise(F.col("__f"))
+        out = carried.where(F.col("__side") == l_side).withColumn("__m", m)
     else:
-        w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        carried = u.select(
-            "*", F.first("__pack", ignorenulls=True).over(w).alias("__m"))
-    carried = carried.withColumn(
-        "__m", F.when(F.col("__ts").isNotNull(), F.col("__m")))
-    out = carried.where(F.col("__side") == l_side).select(
+        carry = back if direction == "backward" else fwd
+        out = (u.select("*", carry.alias("__m"))
+               .withColumn("__m", F.when(F.col("__ts").isNotNull(),
+                                         F.col("__m")))
+               .where(F.col("__side") == l_side))
+    return out.select(
         *[F.col(f"__l_{c}").alias(c) for c in left_cols],
         F.col("__m.rts").alias(right_ts),
         *[F.col(f"__m.v_{c}").alias(c) for c in value_cols],
     )
-    return out
-
-
-def _asof_union_window_nearest(left, right, on, left_ts, right_ts,
-                               value_cols):
-    """direction='nearest' in ONE union+window pass: the same sort computes
-    both the backward carry (last over the preceding frame — inclusive at
-    equal ts, features sort first) and the forward carry (first over the
-    following frame — strictly-later features; the equal-ts case is already
-    a distance-0 backward win), then each event picks the closer match.
-    Tie (equidistant) → backward, the point-in-time-safe side (documented
-    contract; matches pd.merge_asof's backward preference on ties).
-
-    Same single shuffle as backward/forward — nearest costs one extra
-    carried struct, not a second pass. Both sides carry ONE struct (see
-    _pack_type) so NULL value columns never mix rows. A NULL event
-    timestamp matches nothing (it would otherwise sort first and grab the
-    earliest feature). A right row with NULL right_ts is filtered before
-    the union (ADVICE r02): it would otherwise sort first and its non-NULL
-    __pack (rts=NULL, values set) could be carried as a pseudo-match."""
-    left_cols = left.columns
-    ptype = _pack_type(right, right_ts, value_cols)
-    right = right.where(F.col(right_ts).isNotNull())
-    r = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.struct(F.col(right_ts).alias("rts"),
-                 *[F.col(c).alias(f"v_{c}") for c in value_cols])
-        .alias("__pack"),
-        *[F.lit(None).alias(f"__l_{c}") for c in left_cols],
-    )
-    l = left.select(
-        *on,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast(ptype).alias("__pack"),
-        *[F.col(c).alias(f"__l_{c}") for c in left_cols],
-    )
-    u = r.unionByName(l)
-    base = Window.partitionBy(*on).orderBy(F.col("__ts").asc(),
-                                           F.col("__side").asc())
-    wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    carried = u.select(
-        "*",
-        F.last("__pack", ignorenulls=True).over(wb).alias("__b"),
-        F.first("__pack", ignorenulls=True).over(wf).alias("__f"),
-    )
-    ts_ms = F.unix_millis(F.col("__ts").cast("timestamp"))
-    b_ms = F.unix_millis(F.col("__b.rts").cast("timestamp"))
-    f_ms = F.unix_millis(F.col("__f.rts").cast("timestamp"))
-    use_b = (F.col("__f").isNull()
-             | (F.col("__b").isNotNull()
-                & ((ts_ms - b_ms) <= (f_ms - ts_ms))))
-    m = F.when(F.col("__ts").isNull(), F.lit(None).cast(ptype)) \
-        .when(use_b, F.col("__b")).otherwise(F.col("__f"))
-    return carried.where(F.col("__side") == 1) \
-        .withColumn("__m", m) \
-        .select(
-            *[F.col(f"__l_{c}").alias(c) for c in left_cols],
-            F.col("__m.rts").alias(right_ts),
-            *[F.col(f"__m.v_{c}").alias(c) for c in value_cols],
-        )
 
 
 def _asof_merge(left, right, on, left_ts, right_ts, value_cols,
@@ -325,28 +303,30 @@ def _asof_union_window_split(left, right, on, left_ts, right_ts, value_cols,
                              bucket_ms: int = 7 * 24 * 3600 * 1000):
     """Skew-killing as-of: a Zipf-hot key turns the plain union_window into
     a single-task straggler (one window partition per key). Split every
-    key's timeline into fixed time buckets; each (key, bucket) partition
-    carries independently, seeded with a carry-in row = the latest right
-    row of any STRICTLY EARLIER bucket (computed on the tiny per-(key,
-    bucket) seed table, so the pre-pass is O(keys × buckets)).
+    key's timeline into fixed time buckets `__bk`; each (key, bucket)
+    partition carries independently through `_asof_union_window(...,
+    part=["__bk"])`. Its right side is the bucket's own right rows plus a
+    carry-in row = the latest right row of any STRICTLY EARLIER bucket,
+    with its own timestamp (computed on the tiny per-(key, bucket) seed
+    table, so the pre-pass is O(keys × buckets)). The bucket is monotone
+    in the timestamp, so a carry-in row is strictly earlier than every row
+    of the bucket it enters, and the core's order on the full timestamp
+    breaks every tie within a millisecond.
 
     Same semantics as union_window (backward inclusive; right side must be
     unique per (key, ts)); equivalence is property-tested. NULL-timestamp
     contract (ADVICE r02): right rows with NULL right_ts are filtered (they
-    can never match and would otherwise land in a NULL bucket as packs);
-    left rows with NULL left_ts get a NULL match — their NULL bucket sorts
-    before every seed bucket, so no carry-in reaches them, and no right
-    rows share the NULL bucket.
+    can never match and would otherwise seed a NULL bucket); left rows with
+    NULL left_ts get a NULL match — their NULL bucket sorts before every
+    seed bucket, so no carry-in reaches them, and no right rows share the
+    NULL bucket.
     """
-    left_cols = left.columns
-    ms = lambda c: F.unix_millis(F.col(c).cast("timestamp"))
-    LONG_MIN = -(1 << 62)
-
+    bucket = lambda c: (F.unix_millis(F.col(c).cast("timestamp"))
+                        / bucket_ms).cast("long")
     right = right.where(F.col(right_ts).isNotNull())
-    r = right.withColumn("__ms", ms(right_ts)) \
-             .withColumn("__bk", (F.col("__ms") / bucket_ms).cast("long"))
-    l = left.withColumn("__ms", ms(left_ts)) \
-            .withColumn("__bk", (F.col("__ms") / bucket_ms).cast("long"))
+    r = right.select(*on, right_ts, *value_cols,
+                     bucket(right_ts).alias("__bk"))
+    l = left.withColumn("__bk", bucket(left_ts))
 
     ptype = _pack_type(right, right_ts, value_cols)
     pack_r = F.struct(
@@ -355,9 +335,9 @@ def _asof_union_window_split(left, right, on, left_ts, right_ts, value_cols,
 
     # seeds: latest right row per (key, bucket) — small
     w_seed = (Window.partitionBy(*on, "__bk")
-              .orderBy(F.col("__ms").desc()))
+              .orderBy(F.col(right_ts).desc()))
     seeds = (r.withColumn("__rn", F.row_number().over(w_seed))
-             .where(F.col("__rn") == 1).drop("__rn"))
+             .where(F.col("__rn") == 1))
 
     # buckets that have left rows, and their carry-in from earlier buckets:
     # union (needed side=0, seeds side=1) ordered by (bucket, side); a
@@ -373,38 +353,15 @@ def _asof_union_window_split(left, right, on, left_ts, right_ts, value_cols,
     w_carry = (Window.partitionBy(*on)
                .orderBy(F.col("__bk").asc(), F.col("__sd").asc())
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    carry = (u.select(
+    carry_in = (u.select(
         *on, "__bk", "__sd",
         F.last("__c", ignorenulls=True).over(w_carry).alias("__in"))
-        .where((F.col("__sd") == 0) & F.col("__in").isNotNull()))
+        .where((F.col("__sd") == 0) & F.col("__in").isNotNull())
+        .select(*on, "__bk", F.col("__in.rts").alias(right_ts),
+                *[F.col(f"__in.v_{c}").alias(c) for c in value_cols]))
 
-    # assemble the per-(key, bucket) union: carry-in (sorts first), rights,
-    # lefts — then one window partitioned by (key, bucket)
-    r_u = r.select(
-        *on, "__bk", F.col("__ms"), F.lit(0).alias("__side"),
-        pack_r.alias("__pack"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}")
-          for c in left_cols])
-    c_u = carry.select(
-        *on, "__bk", F.lit(LONG_MIN).alias("__ms"),
-        F.lit(-1).alias("__side"),
-        F.col("__in").alias("__pack"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(f"__l_{c}")
-          for c in left_cols])
-    l_u = l.select(
-        *on, "__bk", F.col("__ms"), F.lit(1).alias("__side"),
-        F.lit(None).cast(ptype).alias("__pack"),
-        *[F.col(c).alias(f"__l_{c}") for c in left_cols])
-    u_all = r_u.unionByName(c_u).unionByName(l_u)
-    w = (Window.partitionBy(*on, "__bk")
-         .orderBy(F.col("__ms").asc(), F.col("__side").asc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    carried = u_all.select(
-        "*", F.last("__pack", ignorenulls=True).over(w).alias("__m"))
-    return carried.where(F.col("__side") == 1).select(
-        *[F.col(f"__l_{c}").alias(c) for c in left_cols],
-        F.col("__m.rts").alias(right_ts),
-        *[F.col(f"__m.v_{c}").alias(c) for c in value_cols])
+    return _asof_union_window(l, r.unionByName(carry_in), on, left_ts,
+                              right_ts, value_cols, part=["__bk"])
 
 
 def audit_leakage(joined: DataFrame, left_ts: str = "event_ts",
@@ -419,8 +376,6 @@ def incremental_asof_update(prev_out: "DataFrame", left: "DataFrame",
                             on, left_ts: str = "event_ts",
                             right_ts: str = "feature_ts",
                             value_cols=None,
-                            strategy: str = "union_window",
-                            direction: str = "backward",
                             tolerance_ms: int | None = None,
                             broadcast_key_limit: int | None = 1_000_000
                             ) -> "DataFrame":
@@ -467,6 +422,5 @@ def incremental_asof_update(prev_out: "DataFrame", left: "DataFrame",
     lf = left.join(bkeys, on, "left_semi")
     rf = right_full.join(bkeys, on, "left_semi")
     rec = asof_join(lf, rf, on=on, left_ts=left_ts, right_ts=right_ts,
-                    value_cols=value_cols, strategy=strategy,
-                    direction=direction, tolerance_ms=tolerance_ms)
+                    value_cols=value_cols, tolerance_ms=tolerance_ms)
     return kept.unionByName(rec.select(*kept.columns))

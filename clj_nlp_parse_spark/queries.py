@@ -283,27 +283,39 @@ FROM lefts l ASOF LEFT JOIN rights r
 ORDER BY l.event_id"""
 
 
-def _q_asof(strategy: str):
+def _asof_out(j: DataFrame) -> DataFrame:
+    return j.select(
+        "event_id", "user_id",
+        F.unix_millis("ts").alias("event_ts_ms"),
+        F.unix_millis("fts").alias("feature_ts_ms"),
+        "fval",
+    )
+
+
+def _q_asof(**asof_kwargs):
+    """The as-of registry body: `asof_join` over `_asof_sides` with the
+    given strategy/direction/tolerance, projected to the oracle columns."""
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from clj_nlp_parse_spark.operators import asof
         lefts, rights = _asof_sides(spark, sf_dir)
-        j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
-                           right_ts="fts", value_cols=["fval"],
-                           strategy=strategy)
-        return j.select(
-            "event_id", "user_id",
-            F.unix_millis("ts").alias("event_ts_ms"),
-            F.unix_millis("fts").alias("feature_ts_ms"),
-            "fval",
-        )
+        return _asof_out(asof.asof_join(
+            lefts, rights, on=["user_id"], left_ts="ts", right_ts="fts",
+            value_cols=["fval"], **asof_kwargs))
     return q
 
 
-register("asof_join", _ASOF_ORACLE, order=("event_id",))(_q_asof("union_window"))
-register("asof_join_merge", _ASOF_ORACLE, order=("event_id",))(_q_asof("merge_asof"))
+register("asof_join", _ASOF_ORACLE, order=("event_id",))(
+    _q_asof(strategy="union_window"))
+register("asof_join_merge", _ASOF_ORACLE, order=("event_id",))(
+    _q_asof(strategy="merge_asof"))
 
 
-@register(
+# Nearest-direction as-of (pd.merge_asof direction='nearest'): each event
+# takes whichever of the latest-before / earliest-after feature is closer,
+# ties -> backward (the point-in-time-safe side). ONE union+window pass
+# computes both carries on the same sort — same single shuffle as backward.
+# Oracle: two DuckDB ASOF joins + the same distance CASE.
+register(
     "asof_join_nearest",
     """
     WITH lefts AS (SELECT event_id, user_id, ts FROM events
@@ -327,24 +339,7 @@ register("asof_join_merge", _ASOF_ORACLE, order=("event_id",))(_q_asof("merge_as
            THEN bval ELSE fv END AS fval
     FROM b JOIN f USING (event_id)
     ORDER BY b.event_id""",
-    order=("event_id",))
-def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-direction as-of (pd.merge_asof direction='nearest'): each
-    event takes whichever of the latest-before / earliest-after feature is
-    closer, ties → backward (the point-in-time-safe side). ONE union+window
-    pass computes both carries on the same sort — same single shuffle as
-    backward. Oracle: two DuckDB ASOF joins + the same distance CASE."""
-    from clj_nlp_parse_spark.operators import asof
-    lefts, rights = _asof_sides(spark, sf_dir)
-    j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
-                       right_ts="fts", value_cols=["fval"],
-                       direction="nearest")
-    return j.select(
-        "event_id", "user_id",
-        F.unix_millis("ts").alias("event_ts_ms"),
-        F.unix_millis("fts").alias("feature_ts_ms"),
-        "fval",
-    )
+    order=("event_id",))(_q_asof(direction="nearest"))
 
 
 @register("asof_incremental", _ASOF_ORACLE, order=("event_id",))
@@ -362,15 +357,13 @@ def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof.incremental_asof_update(
         prev, lefts, rights, batch, on=["user_id"], left_ts="ts",
         right_ts="fts", value_cols=["fval"])
-    return out.select(
-        "event_id", "user_id",
-        F.unix_millis("ts").alias("event_ts_ms"),
-        F.unix_millis("fts").alias("feature_ts_ms"),
-        "fval",
-    )
+    return _asof_out(out)
 
 
-@register(
+# Forward (inclusive) as-of join — earliest feature_ts >= event_ts per
+# entity; the label-join direction of pd.merge_asof. Same one-shuffle
+# union+window shape as backward, with first() over the following frame.
+register(
     "asof_join_forward",
     """
     WITH lefts AS (SELECT event_id, user_id, ts FROM events
@@ -382,28 +375,16 @@ def q_asof_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lefts l ASOF LEFT JOIN rights r
       ON l.user_id = r.user_id AND l.ts <= r.fts
     ORDER BY l.event_id""",
-    order=("event_id",))
-def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward (inclusive) as-of join — earliest feature_ts >= event_ts per
-    entity; the label-join direction of pd.merge_asof. Same one-shuffle
-    union+window shape as backward, with first() over the following frame."""
-    from clj_nlp_parse_spark.operators import asof
-    lefts, rights = _asof_sides(spark, sf_dir)
-    j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
-                       right_ts="fts", value_cols=["fval"],
-                       direction="forward")
-    return j.select(
-        "event_id", "user_id",
-        F.unix_millis("ts").alias("event_ts_ms"),
-        F.unix_millis("fts").alias("feature_ts_ms"),
-        "fval",
-    )
+    order=("event_id",))(_q_asof(direction="forward"))
 
 
 _ASOF_TOL_MS = 1800 * 1000  # 30 min staleness bound
 
 
-@register(
+# Backward as-of with a staleness bound (pd.merge_asof tolerance): matches
+# farther than 30 min from the event are nulled — exact, because any other
+# candidate is strictly staler than the latest one.
+register(
     "asof_join_tolerance",
     f"""
     WITH lefts AS (SELECT event_id, user_id, ts FROM events
@@ -419,22 +400,7 @@ _ASOF_TOL_MS = 1800 * 1000  # 30 min staleness bound
       CASE WHEN fts IS NULL OR epoch_ms(ts) - epoch_ms(fts) > {_ASOF_TOL_MS}
            THEN NULL ELSE fval END AS fval
     FROM j ORDER BY event_id""",
-    order=("event_id",))
-def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of with a staleness bound (pd.merge_asof tolerance):
-    matches farther than 30 min from the event are nulled — exact, because
-    any other candidate is strictly staler than the latest one."""
-    from clj_nlp_parse_spark.operators import asof
-    lefts, rights = _asof_sides(spark, sf_dir)
-    j = asof.asof_join(lefts, rights, on=["user_id"], left_ts="ts",
-                       right_ts="fts", value_cols=["fval"],
-                       tolerance_ms=_ASOF_TOL_MS)
-    return j.select(
-        "event_id", "user_id",
-        F.unix_millis("ts").alias("event_ts_ms"),
-        F.unix_millis("fts").alias("feature_ts_ms"),
-        "fval",
-    )
+    order=("event_id",))(_q_asof(tolerance_ms=_ASOF_TOL_MS))
 
 
 @register(
@@ -2408,7 +2374,8 @@ def q_verb_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srl.verb_features(_docs(spark, sf_dir))
 
 
-register("asof_join_split", _ASOF_ORACLE, order=("event_id",))(_q_asof("union_window_split"))
+register("asof_join_split", _ASOF_ORACLE, order=("event_id",))(
+    _q_asof(strategy="union_window_split"))
 
 
 # ------------------------------------------------------ remaining O/F covers

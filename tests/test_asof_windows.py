@@ -104,17 +104,28 @@ def test_asof_split_equals_union_window(spark):
     # property: the skew-splitting strategy must produce IDENTICAL results
     # to the plain window on randomized hot-key data spanning many buckets
     import random
+    # Timestamps carry microsecond offsets, and half the rows fall into a
+    # few shared milliseconds, so the split must order and seed on the
+    # full timestamp, not on unix_millis.
     rnd = random.Random(7)
     base = dt.datetime(2025, 1, 1)
+    span_ms = 60 * 24 * 60 * 60 * 1000
+    hot_ms = [rnd.randint(0, span_ms) for _ in range(6)]
+
+    def draw_ts():
+        ms = (rnd.choice(hot_ms) if rnd.random() < 0.5
+              else rnd.randint(0, span_ms))
+        return base + dt.timedelta(milliseconds=ms,
+                                   microseconds=rnd.randint(0, 999))
+
     lefts, rights = [], []
     for i in range(600):
         ent = f"e{min(rnd.randint(0, 9), rnd.randint(0, 9))}"  # skewed
-        ts = base + dt.timedelta(minutes=rnd.randint(0, 60 * 24 * 60))
-        lefts.append((i, ent, ts))
+        lefts.append((i, ent, draw_ts()))
     seen = set()
     for i in range(300):
         ent = f"e{rnd.randint(0, 9)}"
-        ts = base + dt.timedelta(minutes=rnd.randint(0, 60 * 24 * 60))
+        ts = draw_ts()
         if (ent, ts) in seen:  # right side unique per (key, ts)
             continue
         seen.add((ent, ts))
@@ -133,11 +144,51 @@ def test_asof_split_equals_union_window(spark):
 
 
 def test_asof_split_small_goldens(spark):
+    import itertools
+
     left, right = _sides(spark)
     out = asof.asof_join(left, right, on=["entity_id"],
                          strategy="union_window_split")
     got = {r.event_id: (r.feature_ts, r.fval) for r in out.collect()}
     assert got == _expected()
+
+    def join_all(lefts, rights):
+        ldf = spark.createDataFrame(
+            lefts, "event_id long, entity_id string, event_ts timestamp")
+        rdf = spark.createDataFrame(
+            rights, "entity_id string, feature_ts timestamp, fval double")
+        res = {}
+        for strategy in ("union_window", "union_window_split", "merge_asof"):
+            out = asof.asof_join(ldf, rdf, on=["entity_id"],
+                                 strategy=strategy)
+            assert asof.audit_leakage(out) == 0, strategy
+            res[strategy] = {r.event_id: (r.feature_ts, r.fval)
+                             for r in out.collect()}
+        return res
+
+    # sub-millisecond leak: the event at t+100us must not see the feature
+    # at t+900us of the same millisecond, only the one 5 s earlier
+    t = _t("2025-01-01T10:00:00")
+    us = lambda n: t + dt.timedelta(microseconds=n)
+    res = join_all(
+        [(1, "a", us(100))],
+        [("a", t - dt.timedelta(seconds=5), 1.0), ("a", us(900), 2.0)])
+    for strategy, got in res.items():
+        assert got == {1: (t - dt.timedelta(seconds=5), 1.0)}, strategy
+
+    # carry-in: three features share one millisecond of an earlier bucket;
+    # the latest of them is carried into the event's bucket, whatever the
+    # input order (one entity per order of the three)
+    later = t + dt.timedelta(days=8)
+    feats = [(us(100), 1.0), (us(500), 2.0), (us(900), 3.0)]
+    orders = list(itertools.permutations(feats))
+    res = join_all(
+        [(i, f"p{i}", later) for i in range(len(orders))],
+        [(f"p{i}", ts, v) for i, order in enumerate(orders)
+         for ts, v in order])
+    for strategy, got in res.items():
+        assert got == {i: (us(900), 3.0) for i in range(len(orders))}, \
+            strategy
 
 
 def test_asof_forward_semantics(spark):
@@ -382,6 +433,31 @@ def test_asof_nearest_vs_pandas_and_ties(spark):
                            direction="nearest", tolerance_ms=3000) \
         .collect()[0]
     assert row_t.fval is None  # both candidates 5 s away > 3 s budget
+
+    # documented contract: the tie-break and tolerance_ms compare
+    # unix_millis values, as the DuckDB oracles' epoch_ms do
+    t = dt.datetime(2025, 1, 1)
+    us = lambda n: t + dt.timedelta(microseconds=n)
+    rights3 = spark.createDataFrame(
+        [("x", us(10_300), 1.0), ("x", us(11_300), 2.0)],
+        "entity_id string, feature_ts timestamp, fval double")
+    lefts3 = spark.createDataFrame(
+        [(1, "x", us(10_900))],
+        "event_id long, entity_id string, event_ts timestamp")
+    # 0.6 ms before vs 0.4 ms after: truncated to 0 and 1 ms
+    row = asof.asof_join(lefts3, rights3, on=["entity_id"],
+                         direction="nearest").collect()[0]
+    assert row.fval == 1.0
+    # a 1000.8 ms gap (10.0 ms -> 1010.8 ms) passes a 1000 ms tolerance
+    lefts3 = spark.createDataFrame(
+        [(1, "x", us(1_010_800))],
+        "event_id long, entity_id string, event_ts timestamp")
+    rights3 = spark.createDataFrame(
+        [("x", us(10_000), 1.0)],
+        "entity_id string, feature_ts timestamp, fval double")
+    row = asof.asof_join(lefts3, rights3, on=["entity_id"],
+                         direction="nearest", tolerance_ms=1000).collect()[0]
+    assert row.fval == 1.0
 
 
 def test_asof_null_feature_value_not_replaced_by_older(spark):

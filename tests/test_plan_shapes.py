@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -30,7 +31,13 @@ def test_feature_scan_pruned_and_pushed(spark, sf_dir):
     assert "ArrowEval" not in plan and "BatchEvalPython" not in plan
 
 
-def test_asof_union_window_single_shuffle_no_python(spark):
+@pytest.mark.parametrize("kw", [
+    dict(direction="backward"),
+    dict(direction="forward"),
+    dict(direction="nearest"),
+    dict(direction="forward", tolerance_ms=60000),
+], ids=["backward", "forward", "nearest", "forward_tolerance"])
+def test_asof_union_window_single_shuffle_no_python(spark, kw):
     import datetime as dt
     from clj_nlp_parse_spark.operators import asof
     l = spark.createDataFrame(
@@ -39,7 +46,7 @@ def test_asof_union_window_single_shuffle_no_python(spark):
     r = spark.createDataFrame(
         [("a", dt.datetime(2025, 1, 1), 1.0)],
         "entity_id string, feature_ts timestamp, fval double")
-    plan = _plan(asof.asof_join(l, r, ["entity_id"]))
+    plan = _plan(asof.asof_join(l, r, ["entity_id"], **kw))
     # exactly one shuffle: the window partitioning on the join key
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
     assert "ArrowEval" not in plan and "FlatMapCoGroups" not in plan
@@ -115,21 +122,6 @@ def test_jaccard_prefix_no_cartesian_all_equijoins(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEval" not in plan and "BatchEvalPython" not in plan
-
-
-def test_asof_forward_single_shuffle_no_python(spark):
-    import datetime as dt
-    from clj_nlp_parse_spark.operators import asof
-    l = spark.createDataFrame(
-        [(1, "a", dt.datetime(2025, 1, 1))],
-        "event_id long, entity_id string, event_ts timestamp")
-    r = spark.createDataFrame(
-        [("a", dt.datetime(2025, 1, 1), 1.0)],
-        "entity_id string, feature_ts timestamp, fval double")
-    plan = _plan(asof.asof_join(l, r, ["entity_id"], direction="forward",
-                                tolerance_ms=60000))
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-    assert "ArrowEval" not in plan and "FlatMapCoGroups" not in plan
 
 
 def test_composed_pipeline_zero_joins_zero_exchanges(spark):

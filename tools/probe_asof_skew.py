@@ -11,6 +11,9 @@ spread over `n_keys` uniform keys; right side is 1 feature row per
 entity per time bucket. union_window sorts the hot key in one task;
 union_window_split bounds every task by the time-bucket width.
 
+Before timing, each size asserts that the split returns exactly
+union_window's rows and that neither output leaks (audit_leakage == 0).
+
 Usage: python tools/probe_asof_skew.py [rows_m ...]   (default 2 16)
 """
 
@@ -65,9 +68,17 @@ def main() -> None:
         left = left.localCheckpoint()       # freeze input outside timing
         right = right.localCheckpoint()
         rec = {"rows_m": m, "hot_share": hot_share}
-        for strategy in ("union_window", "union_window_split"):
-            df = asof.asof_join(left, right, on=["entity_id"],
-                                strategy=strategy)
+        joins = {s: asof.asof_join(left, right, on=["entity_id"],
+                                   strategy=s)
+                 for s in ("union_window", "union_window_split")}
+        # a time means nothing for a wrong answer: the split must return
+        # union_window's rows exactly, and neither may leak
+        a, b = joins["union_window"], joins["union_window_split"]
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, \
+            "union_window_split rows differ from union_window"
+        for strategy, df in joins.items():
+            assert asof.audit_leakage(df) == 0, f"{strategy} leaks"
+        for strategy, df in joins.items():
             df.write.format("noop").mode("overwrite").save()   # warm
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
